@@ -3433,11 +3433,9 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-        read_vocab,
-        stream_vocab_counts,
-    )
+    from rag_vertex_ai_vector_search_spark.streaming.vocab import vocab_fold
 
+    vocab = vocab_fold()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="stream_vocab_")
     try:
@@ -3456,9 +3454,7 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 != 2).repartition(2).write.parquet(
             src
         )
-        q = stream_vocab_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
-        )
+        q = vocab.stream(_restartable_stream(), table, checkpoint_dir=ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -3468,9 +3464,7 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = stream_vocab_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
-        )
+        q = vocab.stream(_restartable_stream(), table, checkpoint_dir=ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -3483,7 +3477,7 @@ def q_streaming_vocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"stream produced {n_epochs} micro-batch(es); the gate "
                 "requires exactly 3 (two pre-restart, one post-restart)"
             )
-        return read_vocab(spark, table).localCheckpoint(eager=True)
+        return vocab.read(spark, table).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -3630,18 +3624,10 @@ def q_streaming_sketches_maintained(
         hll_estimate,
     )
     from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        compact_bloom,
-        compact_cms,
-        compact_histogram,
-        compact_hll,
-        read_bloom,
-        read_cms,
-        read_histogram,
-        read_hll,
-        stream_bloom,
-        stream_cms,
-        stream_histogram,
-        stream_hll,
+        bloom_fold,
+        cms_fold,
+        histogram_fold,
+        hll_fold,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
@@ -3660,62 +3646,31 @@ def q_streaming_sketches_maintained(
                 ).alias("word"),
             )
         )
-        runs = (
-            (
-                "hll",
-                lambda t, c: stream_hll(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    group_cols=("lang",), p=8,
-                ),
-                compact_hll,
-                {"group_cols": ("lang",)},
+        folds = {
+            "hll": hll_fold(col="word", group_cols=("lang",), p=8),
+            "cms": cms_fold(col="word", depth=4, width=64),
+            "bloom": bloom_fold(col="word", n_bits=1 << 16, k=3),
+            "hist": histogram_fold(
+                col=F.length("word"), lo=0, hi=64, n_bins=32
             ),
-            (
-                "cms",
-                lambda t, c: stream_cms(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    depth=4, width=64,
-                ),
-                compact_cms,
-                {},
-            ),
-            (
-                "bloom",
-                lambda t, c: stream_bloom(
-                    words_stream, t, checkpoint_dir=c, col="word",
-                    n_bits=1 << 16, k=3,
-                ),
-                compact_bloom,
-                {},
-            ),
-            (
-                "hist",
-                lambda t, c: stream_histogram(
-                    words_stream.select(
-                        F.length("word").alias("wlen")
-                    ),
-                    t, checkpoint_dir=c, col="wlen",
-                    lo=0, hi=64, n_bins=32,
-                ),
-                compact_histogram,
-                {},
-            ),
-        )
+        }
         # One source, four maintenance sinks, started CONCURRENTLY --
         # the production shape (and it keeps this gate's wall time at
         # ~one stream instead of four).
         started = [
-            (name, start(f"{work}/{name}", f"{work}/ckpt_{name}"),
-             compact, kw)
-            for name, start, compact, kw in runs
+            fold.stream(
+                words_stream, f"{work}/{name}",
+                checkpoint_dir=f"{work}/ckpt_{name}",
+            )
+            for name, fold in folds.items()
         ]
         try:
-            for _, q, _, _ in started:
+            for q in started:
                 q.processAllAvailable()
         finally:
-            for _, q, _, _ in started:
+            for q in started:
                 q.stop()
-        for name, _, compact, kw in started:
+        for name, fold in folds.items():
             table = f"{work}/{name}"
             n_epochs = (
                 spark.read.parquet(table)
@@ -3727,7 +3682,7 @@ def q_streaming_sketches_maintained(
                     "the gate requires the maintained table to be built "
                     "from >= 2"
                 )
-            compact(spark, table, **kw)
+            fold.compact(spark, table)
             post = [
                 r[0]
                 for r in spark.read.parquet(table)
@@ -3738,7 +3693,7 @@ def q_streaming_sketches_maintained(
                     f"{name} compaction left epochs {post}; expected "
                     "exactly the _epoch=-1 base partition"
                 )
-        hll_regs = read_hll(spark, f"{work}/hll", group_cols=("lang",))
+        hll_regs = folds["hll"].read(spark, f"{work}/hll")
         est = hll_estimate(hll_regs, group_cols=("lang",), p=8)
         out = (
             hll_regs.select(
@@ -3756,7 +3711,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_cms(spark, f"{work}/cms").select(
+                folds["cms"].read(spark, f"{work}/cms").select(
                     F.lit("cms").alias("sketch"),
                     F.col("row").cast("string").alias("k1"),
                     F.col("bucket").cast("long").alias("k2"),
@@ -3764,7 +3719,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_bloom(spark, f"{work}/bloom").select(
+                folds["bloom"].read(spark, f"{work}/bloom").select(
                     F.lit("bloom").alias("sketch"),
                     F.lit("").alias("k1"),
                     F.col("word").cast("long").alias("k2"),
@@ -3772,7 +3727,7 @@ def q_streaming_sketches_maintained(
                 )
             )
             .unionByName(
-                read_histogram(spark, f"{work}/hist").select(
+                folds["hist"].read(spark, f"{work}/hist").select(
                     F.lit("hist").alias("sketch"),
                     F.lit("").alias("k1"),
                     F.col("bin").cast("long").alias("k2"),
@@ -3898,17 +3853,12 @@ def q_streaming_lm_models_maintained(
         trigram_surprisal,
     )
     from rag_vertex_ai_vector_search_spark.streaming.dsir_stream import (
-        read_dsir_model,
-        stream_dsir_model,
+        dsir_fold,
     )
     from rag_vertex_ai_vector_search_spark.streaming.linestats import (
-        read_line_df,
-        stream_line_df,
+        line_df_fold,
     )
-    from rag_vertex_ai_vector_search_spark.streaming.ngram import (
-        read_ngram_counts,
-        stream_ngram_counts,
-    )
+    from rag_vertex_ai_vector_search_spark.streaming.ngram import ngram_fold
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
@@ -3949,39 +3899,29 @@ def q_streaming_lm_models_maintained(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        runs = (
-            (
-                "ngram",
-                lambda t, c: stream_ngram_counts(
-                    stream, t, checkpoint_dir=c
-                ),
-            ),
-            (
-                "linedf",
-                lambda t, c: stream_line_df(
-                    lined_of(stream), t, checkpoint_dir=c
-                ),
-            ),
-            (
-                "dsir",
-                lambda t, c: stream_dsir_model(
-                    stream, t, checkpoint_dir=c, n_buckets=1024
-                ),
-            ),
-        )
+        ngram = ngram_fold()
+        line_df = line_df_fold()
+        dsir_model = dsir_fold(n_buckets=1024)
+        runs = {
+            "ngram": (ngram, stream),
+            "linedf": (line_df, lined_of(stream)),
+            "dsir": (dsir_model, stream),
+        }
         # One source, three maintenance sinks, started CONCURRENTLY
         # (the production shape; also ~one stream of wall time).
         started = [
-            (name, start(f"{work}/{name}", f"{work}/ckpt_{name}"))
-            for name, start in runs
+            fold.stream(
+                source, f"{work}/{name}", checkpoint_dir=f"{work}/ckpt_{name}"
+            )
+            for name, (fold, source) in runs.items()
         ]
         try:
-            for _, q in started:
+            for q in started:
                 q.processAllAvailable()
         finally:
-            for _, q in started:
+            for q in started:
                 q.stop()
-        for name, _ in started:
+        for name in runs:
             n_epochs = (
                 spark.read.parquet(f"{work}/{name}")
                 .select("_epoch").distinct().count()
@@ -3993,19 +3933,19 @@ def q_streaming_lm_models_maintained(
                     "from >= 2"
                 )
         tri = trigram_surprisal(
-            docs, alpha=0.5, counts=read_ngram_counts(spark, f"{work}/ngram")
+            docs, alpha=0.5, counts=ngram.read(spark, f"{work}/ngram")
         )
         boiler = dedup_boilerplate_lines(
             lined_of(docs),
             max_line_df=1,
-            line_counts=read_line_df(spark, f"{work}/linedf"),
+            line_counts=line_df.read(spark, f"{work}/linedf"),
         )
         dsir = dsir_log_importance(
             docs,
             docs.filter(F.col("lang") == "en"),
             n_buckets=1024,
             alpha=0.5,
-            raw_counts=read_dsir_model(spark, f"{work}/dsir"),
+            raw_counts=dsir_model.read(spark, f"{work}/dsir"),
         )
         out = (
             tri.select(
@@ -4071,7 +4011,7 @@ def q_streaming_rollup_maintained(
     (events split into 3 files, one per trigger, >= 2 asserted
     epochs) maintains the (hour, event_type, user_id)-grain partial
     table, which is then COMPACTED (fold-to-base static overwrite)
-    before `read_rollup` folds it to the (hour, event_type) view.
+    before its read folds it to the (hour, event_type) view.
     Counts and DECIMAL sums are associative and the user grain keeps
     the non-additive countDistinct derivable, so the maintained view
     must equal the batch events_hourly aggregate exactly -- the
@@ -4082,9 +4022,7 @@ def q_streaming_rollup_maintained(
     import tempfile
 
     from rag_vertex_ai_vector_search_spark.streaming.rollup import (
-        compact_rollup,
-        read_rollup,
-        stream_rollup_events,
+        rollup_fold,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -4100,9 +4038,8 @@ def q_streaming_rollup_maintained(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = stream_rollup_events(
-            stream, table, checkpoint_dir=f"{work}/ckpt"
-        )
+        rollup = rollup_fold()
+        q = rollup.stream(stream, table, checkpoint_dir=f"{work}/ckpt")
         try:
             q.processAllAvailable()
         finally:
@@ -4115,7 +4052,7 @@ def q_streaming_rollup_maintained(
                 f"rollup stream produced {n_epochs} micro-batch(es); the "
                 "gate requires the maintained table to be built from >= 2"
             )
-        compact_rollup(spark, table)
+        rollup.compact(spark, table)
         post = [
             r[0]
             for r in spark.read.parquet(table)
@@ -4126,7 +4063,7 @@ def q_streaming_rollup_maintained(
                 f"rollup compaction left epochs {post}; expected exactly "
                 "the _epoch=-1 base partition"
             )
-        return read_rollup(spark, table).localCheckpoint(eager=True)
+        return rollup.read(spark, table).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -6470,19 +6407,20 @@ def q_streaming_doremi_maintained(
     import shutil
     import tempfile
 
+    from rag_vertex_ai_vector_search_spark.operators.doremi import (
+        doremi_weights_from_base,
+    )
     from rag_vertex_ai_vector_search_spark.operators.importance import (
         dsir_gumbel_select,
     )
     from rag_vertex_ai_vector_search_spark.streaming.doremi_stream import (
-        compact_doremi,
-        doremi_weights_from_stream,
-        read_doremi_base,
-        stream_doremi_counts,
+        doremi_fold,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
+    stats = doremi_fold()
     work = tempfile.mkdtemp(prefix="stream_doremi_")
     try:
         src = f"{work}/src"
@@ -6499,9 +6437,7 @@ def q_streaming_doremi_maintained(
         docs.filter(F.col("doc_id") % 3 != 2).repartition(2).write.parquet(
             src
         )
-        q = stream_doremi_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
-        )
+        q = stats.stream(_restartable_stream(), table, checkpoint_dir=ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -6509,9 +6445,7 @@ def q_streaming_doremi_maintained(
         docs.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        q = stream_doremi_counts(
-            _restartable_stream(), table, checkpoint_dir=ckpt
-        )
+        q = stats.stream(_restartable_stream(), table, checkpoint_dir=ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -6524,19 +6458,17 @@ def q_streaming_doremi_maintained(
                 f"stream produced {n_epochs} micro-batch(es); the gate "
                 "requires exactly 3 (two pre-restart, one post-restart)"
             )
-        pre = sorted(
-            tuple(r) for r in read_doremi_base(spark, table).collect()
-        )
-        compact_doremi(spark, table)
+        pre = sorted(tuple(r) for r in stats.read(spark, table).collect())
+        stats.compact(spark, table)
         spark.catalog.refreshByPath(table)
-        post = sorted(
-            tuple(r) for r in read_doremi_base(spark, table).collect()
-        )
+        post = sorted(tuple(r) for r in stats.read(spark, table).collect())
         if pre != post:
             raise RuntimeError(
                 "compaction changed the folded statistic table"
             )
-        weights = doremi_weights_from_stream(spark, table)
+        weights = doremi_weights_from_base(
+            stats.read(spark, table).localCheckpoint(eager=True)
+        )
         scored = docs.select("doc_id", "source").join(
             F.broadcast(weights),
             F.col("source") == F.col("domain"),

@@ -16,7 +16,7 @@ filesystem renames; on HDFS each rename is an atomic metadata op, on
 object stores it is not atomic and a transactional table format
 (Delta/Iceberg OPTIMIZE) is the production seam -- the DataFrame body
 is identical. Run with writers paused, same restriction as
-``compact_rollup``.
+``EpochFold.compact``.
 
 Crash safety (r10, the recluster `_recluster_pending.json` lesson
 applied to the dir-level swap): the swap is marker-protocol'd --

@@ -1,42 +1,14 @@
 from .ingest import stream_merge_into_index
 from .dedup import stream_dedup_exact
-from .rollup import (
-    apply_rollup_batch,
-    compact_rollup,
-    read_rollup,
-    stream_rollup_events,
-)
-from .vocab import (
-    apply_vocab_batch,
-    compact_vocab,
-    read_vocab,
-    stream_vocab_counts,
-)
-from .doremi_stream import (
-    compact_doremi,
-    doremi_weights_from_stream,
-    read_doremi_base,
-    stream_doremi_counts,
-)
-from .ngram import (
-    apply_ngram_batch,
-    compact_ngrams,
-    read_ngram_counts,
-    stream_ngram_counts,
-)
-from .linestats import (
-    apply_line_df_batch,
-    compact_line_df,
-    read_line_df,
-    stream_line_df,
-)
+from .epoch_fold import EpochFold, write_epoch
+from .rollup import rollup_fold
+from .vocab import vocab_fold
+from .doremi_stream import doremi_fold
+from .ngram import ngram_fold
+from .linestats import line_df_fold
 from .join import stream_interval_join
-from .dsir_stream import (
-    apply_dsir_batch,
-    compact_dsir_model,
-    read_dsir_model,
-    stream_dsir_model,
-)
+from .dsir_stream import dsir_fold
+from .sketch_stream import bloom_fold, cms_fold, histogram_fold, hll_fold
 from .dedup_minhash import (
     apply_minhash_dedup_batch,
     read_deduped,
@@ -47,31 +19,19 @@ from .maintenance import maintain_index
 __all__ = [
     "stream_merge_into_index",
     "stream_dedup_exact",
-    "stream_rollup_events",
-    "apply_rollup_batch",
-    "read_rollup",
-    "compact_rollup",
-    "apply_vocab_batch",
-    "compact_doremi",
-    "compact_vocab",
-    "doremi_weights_from_stream",
-    "read_doremi_base",
-    "read_vocab",
-    "stream_doremi_counts",
-    "stream_vocab_counts",
-    "apply_ngram_batch",
-    "compact_ngrams",
-    "read_ngram_counts",
-    "stream_ngram_counts",
-    "apply_line_df_batch",
-    "compact_line_df",
-    "read_line_df",
-    "stream_line_df",
+    "EpochFold",
+    "write_epoch",
+    "rollup_fold",
+    "vocab_fold",
+    "doremi_fold",
+    "ngram_fold",
+    "line_df_fold",
+    "dsir_fold",
+    "hll_fold",
+    "cms_fold",
+    "bloom_fold",
+    "histogram_fold",
     "stream_interval_join",
-    "apply_dsir_batch",
-    "compact_dsir_model",
-    "read_dsir_model",
-    "stream_dsir_model",
     "apply_minhash_dedup_batch",
     "read_deduped",
     "stream_dedup_minhash",

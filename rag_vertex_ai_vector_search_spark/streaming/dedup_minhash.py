@@ -7,8 +7,8 @@ work:
 
 - STATE is a maintained (doc_id, band_id, band_hash, sig) table of
   previously KEPT documents, epoch-partitioned exactly like the
-  vocab/n-gram/line-df streams (writer-scoped dynamic overwrite ->
-  a replayed epoch overwrites its own partition).
+  epoch-fold streams (``epoch_fold.write_epoch``: a replayed epoch
+  overwrites its own partition).
 - Each micro-batch computes its bands once, equi-joins against the
   PRIOR state on (band_id, band_hash) -- the same no-cross-product
   shape as the batch LSH self-join -- and drops a doc when a matched
@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .epoch_fold import write_epoch
 
 
 def _sig_agreement(a, b):
@@ -129,20 +131,9 @@ def apply_minhash_dedup_batch(
     dropped = dup_of_prior.unionByName(losers).distinct()
     kept = batch_df.join(dropped, id_col, "left_anti")
 
-    (
-        kept.withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(out_path)
-    )
-    (
-        banded.join(dropped, id_col, "left_anti")
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(state_path)
+    write_epoch(kept, epoch_id, out_path)
+    write_epoch(
+        banded.join(dropped, id_col, "left_anti"), epoch_id, state_path
     )
 
 

@@ -1,36 +1,31 @@
 """Streaming DoReMi maintenance: the Group-DRO mixture's sufficient
-statistics kept fresh per micro-batch, so domain weights re-derive
-from an incrementally-maintained table instead of rescanning the
-corpus (the streaming/vocab.py design applied to operators/doremi.py).
+statistic kept fresh per micro-batch (an ``EpochFold``, see
+streaming/epoch_fold.py), so domain weights re-derive from a
+maintained table instead of rescanning the corpus.
 
-The batch operator reduces the corpus to ONE bounded table --
-(domain, round, word) -> count -- and derives everything (reference
-model, per-domain models, per-round excess, log-weights) from it.
-That table is purely ADDITIVE, so the streaming form is exactly the
-vocab/rollup recipe: each micro-batch writes its PARTIAL counts under
-``_epoch=<epoch_id>`` with writer-scoped dynamic partition overwrite
-(a replayed epoch overwrites its own partition wholesale ->
-exactly-once table contents under at-least-once foreachBatch), the
-read-time fold is one sum per key, and ``compact_doremi`` folds
-accumulated epochs into a base partition to bound read amplification.
-
-``doremi_weights_from_stream`` then routes the folded table through
-the SAME ``doremi_weights_from_base`` math the batch operator uses --
+The batch operator (operators/doremi.py) reduces the corpus to ONE
+bounded table -- (domain, round, word) -> count -- and derives
+everything (reference model, per-domain models, per-round excess,
+log-weights) from it. Fold algebra: that table is purely ADDITIVE, so
+the fold is one sum per key, and
+``doremi_weights_from_base(doremi_fold().read(...))`` routes the
+folded table through the SAME weight math the batch operator uses --
 maintained == batch is structural, and the driver gate
 (streaming_doremi_maintained) hash-checks it against the batch SQL
 mirror.
 
-At 100 TB: the per-batch partial is (domains x rounds x batch vocab)
+At 100 TB the per-batch partial is (domains x rounds x batch vocab)
 sized with map-side combine, the maintained table is vocabulary-sized,
 and weight refresh is a read of THAT table -- never the corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text, sha60_hash
+from .epoch_fold import EpochFold
 
 
 def doremi_partial(
@@ -67,70 +62,11 @@ def doremi_partial(
     )
 
 
-def apply_doremi_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str, **kwargs
-) -> None:
-    """foreachBatch body: the batch's partial under its epoch
-    partition (writer-scoped dynamic overwrite -> replay-idempotent)."""
-    (
-        doremi_partial(batch_df, **kwargs)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
-    )
-
-
-def stream_doremi_counts(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, **kwargs
-):
-    """Attach the DoReMi statistic maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_doremi_batch(
-                df, eid, table_path, **kwargs
-            )
-        )
-        .start()
-    )
-
-
-def read_doremi_base(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current sufficient-statistic
-    table (counts are additive; one sum per key)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("_domain", "_round", "word")
-        .agg(F.sum("_c").cast("long").alias("_c"))
-    )
-
-
-def doremi_weights_from_stream(
-    spark: SparkSession, table_path: str, **kwargs
-) -> DataFrame:
-    """The maintained table through the BATCH weight math
-    (operators/doremi.py::doremi_weights_from_base)."""
-    from ..operators.doremi import doremi_weights_from_base
-
-    return doremi_weights_from_base(
-        read_doremi_base(spark, table_path).localCheckpoint(eager=True),
-        **kwargs,
-    )
-
-
-def compact_doremi(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epoch partitions into one base partition
-    (``_epoch=-1``), bounding read amplification; run with the stream
-    paused (the vocab/rollup caveat, Delta/Iceberg the closing seam)."""
-    folded = (
-        read_doremi_base(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)  # cut lineage off replaced files
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(
-        table_path
+def doremi_fold(**kwargs) -> EpochFold:
+    """The maintained (_domain, _round, word, _c) statistic;
+    ``kwargs`` are ``doremi_partial``'s."""
+    return EpochFold(
+        lambda df: doremi_partial(df, **kwargs),
+        keys=("_domain", "_round", "word"),
+        folds=(("_c", "sum"),),
     )

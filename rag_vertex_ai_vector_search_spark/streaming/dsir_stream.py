@@ -1,113 +1,33 @@
 """Streaming DSIR model maintenance: hashed n-gram bucket counts kept
-fresh per micro-batch, so importance scoring (operators/importance.py)
-reads an incrementally-maintained raw-corpus model instead of
-rescanning the corpus.
+fresh per micro-batch (an ``EpochFold``, see streaming/epoch_fold.py),
+so importance scoring (operators/importance.py) reads a maintained
+raw-corpus model instead of rescanning the corpus.
 
-Same exactly-once-by-layout design as streaming/vocab.py: each
-micro-batch reduces to PARTIAL (bucket, n) counts written under
-``_epoch=<epoch_id>`` with writer-scoped dynamic partition overwrite
--- a replayed epoch overwrites its own partition wholesale, so
-at-least-once foreachBatch delivery still yields exactly-once table
-contents. Bucket counts are purely additive (each document arrives in
-exactly one batch), so the read-time fold is one sum per bucket and
-the folded table is bit-equal to the batch model by construction --
-which makes `dsir_log_importance(raw_counts=read_dsir_model(...))`
-score BIT-EQUAL to batch self-modeling.
-
-The per-batch partial is AT MOST ``n_buckets`` rows (default 8192)
-whatever the batch size -- the fixed hash-bucket space bounds both the
-partial and the folded table, so this is the cheapest maintained table
-in the streaming family. The TARGET model is typically static (a
-curated corpus); maintain one of these per corpus if the target also
-streams.
+Fold algebra: bucket counts are purely additive (each document arrives
+in exactly one batch), so the fold is one sum per bucket and
+``dsir_log_importance(raw_counts=dsir_fold(...).read(...))`` scores
+BIT-EQUAL to batch self-modeling. The per-batch partial is AT MOST
+``n_buckets`` rows (default 8192) whatever the batch size, so this is
+the cheapest maintained table in the streaming family. The TARGET
+model is typically static (a curated corpus); maintain one of these
+per corpus if the target also streams.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from ..operators.importance import hashed_gram_bucket_counts
+from .epoch_fold import EpochFold
 
 
-def dsir_partial(
-    batch_df: DataFrame,
-    *,
-    text_col: str = "text",
-    n_buckets: int = 8192,
-    base_hash: str = "sha60",
-) -> DataFrame:
-    """One micro-batch -> (bucket, n) partial model counts."""
-    return hashed_gram_bucket_counts(
-        batch_df, text_col=text_col, n_buckets=n_buckets, base_hash=base_hash
-    )
-
-
-def apply_dsir_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
+def dsir_fold(
     *, text_col: str = "text", n_buckets: int = 8192,
     base_hash: str = "sha60",
-) -> None:
-    """foreachBatch body: write the batch's partial under its epoch
-    partition (writer-scoped dynamic overwrite -> replay-idempotent)."""
-    (
-        dsir_partial(
-            batch_df, text_col=text_col, n_buckets=n_buckets,
-            base_hash=base_hash,
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
-    )
-
-
-def stream_dsir_model(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, text_col: str = "text", n_buckets: int = 8192,
-    base_hash: str = "sha60",
-):
-    """Attach the DSIR raw-model maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_dsir_batch(
-                df, eid, table_path, text_col=text_col,
-                n_buckets=n_buckets, base_hash=base_hash,
-            )
-        )
-        .start()
-    )
-
-
-def read_dsir_model(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current (bucket, n) model."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("bucket")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def compact_dsir_model(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epoch partitions into one base partition
-    (``_epoch=-1``); run with the stream paused (vocab/rollup caveat)."""
-    folded = (
-        read_dsir_model(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)
-    )
-    # Static overwrite is load-bearing: the fold must replace the WHOLE
-    # table. Under a session-level dynamic partitionOverwriteMode the
-    # overwrite would only replace _epoch=-1 (the sole partition present
-    # in `folded`), leaving stale epoch partitions to double-count every
-    # bucket on the next read. Pin it per-write so session config can't
-    # change the semantics.
-    (
-        folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+) -> EpochFold:
+    """The maintained (bucket, n) raw model."""
+    return EpochFold(
+        lambda df: hashed_gram_bucket_counts(
+            df, text_col=text_col, n_buckets=n_buckets, base_hash=base_hash
+        ),
+        keys=("bucket",),
+        folds=(("n", "sum"),),
     )

@@ -1,29 +1,23 @@
 """Streaming line document-frequency maintenance: the boilerplate
-detector's count table kept fresh per micro-batch, so line-level
-dedup (operators/dedup.py::dedup_boilerplate_lines) can clean any
-slice of the corpus against CORPUS-GLOBAL frequencies without a
-rescan.
+detector's count table kept fresh per micro-batch (an ``EpochFold``,
+see streaming/epoch_fold.py), so line-level dedup
+(operators/dedup.py::dedup_boilerplate_lines) can clean any slice of
+the corpus against CORPUS-GLOBAL frequencies without a rescan.
 
-Additivity argument (why a distinct-count is streamable here): the
-per-batch partial is (line, n_docs) with n_docs counted DISTINCT
-WITHIN the batch, and a document arrives in exactly one micro-batch
-(the same one-batch-per-doc contract the vocab and n-gram streams
-rely on), so summing partials over batches equals the corpus-wide
-distinct-document count. A doc REPLAYED by at-least-once delivery
-would break pure additivity -- which is why partials land under
-``_epoch=<id>`` with writer-scoped dynamic partition overwrite: the
-replayed epoch overwrites its own partition wholesale and the fold
-stays exactly-once.
-
+Fold algebra (why a distinct-count is streamable here): the per-batch
+partial is (line, n_docs) with n_docs counted DISTINCT WITHIN the
+batch, and a document arrives in exactly one micro-batch, so the sum
+of partials over epochs is the corpus-wide distinct-document count.
 At 100 TB the heavy keys are exactly the boilerplate lines, which
-map-side combine collapses to one row per (line, batch); the
-maintained table is bounded by distinct lines.
+map-side combine collapses to one row per (line, batch).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .epoch_fold import EpochFold
 
 
 def line_df_partial(
@@ -41,60 +35,15 @@ def line_df_partial(
     )
 
 
-def apply_line_df_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
+def line_df_fold(
     *, id_col: str = "doc_id", text_col: str = "text", sep: str = "\n",
-) -> None:
-    """foreachBatch body: partial counts under the epoch partition
-    (writer-scoped dynamic overwrite -> replay-idempotent)."""
-    (
-        line_df_partial(
-            batch_df, id_col=id_col, text_col=text_col, sep=sep
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+) -> EpochFold:
+    """The maintained (line, n_docs) table -- the ``line_counts=``
+    input of dedup_boilerplate_lines."""
+    return EpochFold(
+        lambda df: line_df_partial(
+            df, id_col=id_col, text_col=text_col, sep=sep
+        ),
+        keys=("line",),
+        folds=(("n_docs", "sum"),),
     )
-
-
-def stream_line_df(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, id_col: str = "doc_id",
-    text_col: str = "text", sep: str = "\n",
-):
-    """Attach the line-frequency maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_line_df_batch(
-                df, eid, table_path,
-                id_col=id_col, text_col=text_col, sep=sep,
-            )
-        )
-        .start()
-    )
-
-
-def read_line_df(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current (line, n_docs) table --
-    the ``line_counts=`` input of dedup_boilerplate_lines."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("line")
-        .agg(F.sum("n_docs").cast("long").alias("n_docs"))
-    )
-
-
-def compact_line_df(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epochs into one base partition (``_epoch=-1``);
-    run with the stream paused (same Delta/Iceberg seam as the other
-    compactors)."""
-    folded = (
-        read_line_df(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)  # cut lineage off the replaced files
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(table_path)

@@ -1,33 +1,25 @@
 """Streaming n-gram count maintenance: the LM-quality ladder's count
-tables kept fresh per micro-batch, so surprisal scoring reads an
-incrementally-maintained model instead of rescanning the corpus.
+table kept fresh per micro-batch (an ``EpochFold``, see
+streaming/epoch_fold.py), so surprisal scoring reads a maintained
+model instead of rescanning the corpus.
 
 ONE table is the sufficient statistic for the whole interpolated
 ladder: trigram POSITION counts (prev2, prev, word, n) over the
 BOS-padded position stream. Every lower-order table the scorer needs
-derives from it by exact integer sums -- bigram counts (sum over
-prev2), context counts (sum over word), unigram counts (sum over
-contexts), corpus totals -- so maintaining the highest order maintains
-them all, and the derived tables are bit-equal to batch recomputation
-by construction (pure bigint arithmetic, no floats anywhere).
+derives from it by exact integer sums (bigram counts sum over prev2,
+context counts over word, unigram counts over contexts), so
+maintaining the highest order maintains them all.
 
-Same exactly-once-by-layout design as streaming/vocab.py and
-rollup.py: each micro-batch's partial lands under ``_epoch=<id>`` with
-WRITER-scoped dynamic partition overwrite, so at-least-once
-foreachBatch replay overwrites its own partition wholesale and table
-contents stay exactly-once. ``compact_ngrams`` folds epochs into a
-base partition to bound read amplification.
-
-At 100 TB the per-batch partial is bounded by the batch's distinct
-trigrams (map-side combine does the reduction), and the read-time fold
-is one sum per trigram -- the same additive-counts economics the vocab
-stream proved, one order higher.
+Fold algebra: additive, one sum per trigram (pure bigint arithmetic,
+no floats anywhere). At 100 TB the per-batch partial is bounded by
+the batch's distinct trigrams.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .epoch_fold import EpochFold
 
 
 def ngram_partial(
@@ -41,56 +33,11 @@ def ngram_partial(
     )
 
 
-def apply_ngram_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
-    *, id_col: str = "doc_id", text_col: str = "text",
-) -> None:
-    """foreachBatch body: partial counts under the epoch partition
-    (writer-scoped dynamic overwrite -> replay-idempotent)."""
-    (
-        ngram_partial(batch_df, id_col=id_col, text_col=text_col)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+def ngram_fold(*, id_col: str = "doc_id", text_col: str = "text") -> EpochFold:
+    """The maintained (prev2, prev, word, n) table -- the ``counts=``
+    input of trigram_surprisal."""
+    return EpochFold(
+        lambda df: ngram_partial(df, id_col=id_col, text_col=text_col),
+        keys=("prev2", "prev", "word"),
+        folds=(("n", "sum"),),
     )
-
-
-def stream_ngram_counts(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, id_col: str = "doc_id", text_col: str = "text",
-):
-    """Attach the n-gram maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_ngram_batch(
-                df, eid, table_path, id_col=id_col, text_col=text_col
-            )
-        )
-        .start()
-    )
-
-
-def read_ngram_counts(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current (prev2, prev, word, n)
-    table -- the `counts=` input of trigram_surprisal."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("prev2", "prev", "word")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def compact_ngrams(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epochs into one base partition (``_epoch=-1``),
-    bounding read amplification; run with the stream paused (the same
-    Delta/Iceberg seam as the rollup/vocab compactors)."""
-    folded = (
-        read_ngram_counts(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)  # cut lineage off the replaced files
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(table_path)

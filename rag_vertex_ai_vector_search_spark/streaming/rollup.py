@@ -1,44 +1,34 @@
 """Streaming incremental rollup: a materialized view maintained per
-micro-batch (the hypertable-continuous-aggregate pattern, Spark-first).
+micro-batch (the hypertable-continuous-aggregate pattern, Spark-first;
+an ``EpochFold``, see streaming/epoch_fold.py).
 
 ``q_events_hourly`` (hour x event_type aggregate) recomputed from raw
 events costs O(history) every refresh; at 100 TB of events that is the
-difference between a dashboard and a daily job. This module maintains
-the same result INCREMENTALLY with O(batch) work per micro-batch:
+difference between a dashboard and a daily job. This view is
+maintained with O(batch) work per micro-batch.
 
-- Each micro-batch is reduced to PARTIAL aggregates at
-  (hour, event_type, user_id) grain -- additive counts and exact
-  DECIMAL sums, plus the user grain so the non-additive
-  ``countDistinct(user_id)`` stays derivable (the classic two-level
-  exact-distinct design; swap the user grain for an HLL sketch column
-  when approximate distinct is acceptable at extreme cardinality).
-- Partials land in the rollup table under ``_epoch=<epoch_id>`` with
-  DYNAMIC partition overwrite. Replays of a failed epoch overwrite
-  their own partition wholesale, so at-least-once foreachBatch delivery
-  still yields EXACTLY-ONCE table contents -- idempotence by layout,
-  no transaction log needed.
-- ``read_rollup`` folds all epochs to the final (hour, event_type)
-  view: sums of partials for the additive measures, count-distinct over
-  the user grain for n_users. Bit-equal to the batch query by
-  construction (DECIMAL sums are associative; see
-  tests/test_streaming_rollup.py).
-- ``compact_rollup`` folds accumulated epoch partitions into one base
-  partition (``_epoch=-1``), bounding read amplification; run it on the
-  maintenance cadence, with the stream paused (a table format with
-  transactions -- Delta/Iceberg -- lifts that restriction; the seam is
-  the same DataFrames).
+Fold algebra: each micro-batch is reduced to PARTIAL aggregates at
+(hour, event_type, user_id) grain -- additive counts and exact DECIMAL
+sums, plus the user grain so the non-additive ``countDistinct(user_id)``
+stays derivable (the classic two-level exact-distinct design; swap the
+user grain for an HLL sketch column when approximate distinct is
+acceptable at extreme cardinality). The fold sums at that grain; the
+read-time finalize sums to (hour, event_type) and counts distinct
+users, bit-equal to the batch query (DECIMAL sums are associative).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .epoch_fold import EpochFold
+
 _DEC = "decimal(18,2)"
-_GRAIN = ("hour", "event_type", "user_id")
 
 
-def _partial(batch_df: DataFrame) -> DataFrame:
+def rollup_partial(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch -> (hour, event_type, user_id) partials."""
     return (
         batch_df.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -51,81 +41,20 @@ def _partial(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def stream_rollup_events(
-    stream_df: DataFrame,
-    rollup_path: str,
-    *,
-    checkpoint_dir: str,
-    trigger_seconds: int | None = None,
-):
-    """Start the streaming query maintaining the rollup at rollup_path."""
-
-    def _apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            _partial(batch_df)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(rollup_path)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def apply_rollup_batch(batch_df: DataFrame, epoch_id: int, rollup_path: str) -> None:
-    """The foreachBatch body, callable directly (tests / backfills)."""
-    if batch_df.isEmpty():
-        return
-    (
-        _partial(batch_df)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(rollup_path)
+def _hourly_view(folded: DataFrame) -> DataFrame:
+    return folded.groupBy("hour", "event_type").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_value").cast("double").alias("sum_value"),
+        F.countDistinct("user_id").alias("n_users"),
     )
 
 
-def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
-    """The materialized view: fold partials to (hour, event_type).
-
-    Matches the batch ``events_hourly`` aggregate exactly: counts and
-    DECIMAL sums are associative, and distinct users survive the
-    partial grain."""
-    partials = spark.read.parquet(rollup_path)
-    return (
-        partials.groupBy("hour", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").cast("double").alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
+def rollup_fold() -> EpochFold:
+    """The maintained events rollup; ``read`` is the (hour,
+    event_type) view of the batch ``events_hourly`` aggregate."""
+    return EpochFold(
+        rollup_partial,
+        keys=("hour", "event_type", "user_id"),
+        folds=(("n_events", "sum"), ("sum_value", "sum")),
+        finalize=_hourly_view,
     )
-
-
-def compact_rollup(spark: SparkSession, rollup_path: str) -> None:
-    """Fold all epoch partitions into the ``_epoch=-1`` base partition.
-
-    Bounds read amplification to O(base + epochs-since-compaction).
-    Re-aggregates at the partial grain (still additive), materializes
-    to cut lineage off the files being replaced, then rewrites the
-    whole table as one partition."""
-    partials = spark.read.parquet(rollup_path)
-    folded = (
-        partials.groupBy(*_GRAIN)
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum(F.col("sum_value").cast(_DEC)).alias("sum_value"),
-        )
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)
-    )
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(rollup_path)

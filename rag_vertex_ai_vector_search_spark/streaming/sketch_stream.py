@@ -1,29 +1,26 @@
-"""Streaming sketch maintenance: HLL register tables and Count-Min
-counter tables kept fresh per micro-batch.
+"""Streaming sketch maintenance: HLL register, Count-Min counter,
+Bloom word and histogram bin tables kept fresh per micro-batch (each
+an ``EpochFold``, see streaming/epoch_fold.py).
 
 The sketch DataFrames of ``operators/sketch.py`` are DESIGNED for
-this: both fold with an idempotent-or-additive per-key operation (HLL:
-register-wise MAX, commutative + idempotent; CMS: counter-wise SUM,
-additive with each row arriving in exactly one batch), so the standard
-epoch-partition layout of the streaming family (vocab / dsir) gives
-exactly-once table contents under at-least-once foreachBatch delivery:
-a replayed epoch overwrites its own ``_epoch`` partition wholesale,
-and the read-time fold over epochs is bit-equal to the batch sketch of
-the full stream -- ``read_hll(...)`` == ``hll_sketch(all_rows)`` and
-``read_cms(...)`` == ``cms_sketch(all_rows)`` by construction
-(tests/test_streaming_sketch.py proves both plus replay idempotence).
+this. Fold algebra, all integer-exact and order-independent:
 
-State is bounded per epoch: <= 2^p register rows / depth x width
-counter rows PER GROUP whatever the batch size -- like the DSIR model,
-among the cheapest maintained tables here. Compaction folds
-accumulated epochs into the ``_epoch=-1`` base partition with STATIC
-overwrite (whole-table replace; dynamic mode would leave stale epochs
-alive and double-count -- same pitfall compact_dsir_model pins).
+- HLL: register-wise MAX (commutative and idempotent);
+- CMS and histogram: counter-wise SUM (additive; each row arrives in
+  exactly one epoch);
+- Bloom: word-wise BIT_OR (commutative and idempotent).
+
+So the fold over epochs is bit-equal to the batch sketch of the full
+stream: ``hll_fold(...).read(...)`` == ``hll_sketch(all_rows)`` and
+likewise for the others. State is bounded per epoch: <= 2^p register
+rows, depth x width counters, n_bits / 32 words or n_bins bins PER
+GROUP whatever the batch size -- like the DSIR model, among the
+cheapest maintained tables here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..operators.sketch import (
@@ -32,281 +29,68 @@ from ..operators.sketch import (
     histogram_sketch,
     hll_sketch,
 )
+from .epoch_fold import EpochFold
 
 
-def apply_hll_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
+def hll_fold(
     *, col: str, group_cols: tuple[str, ...] = (),
     p: int = 12, base_hash: str = "sha60",
-) -> None:
-    """foreachBatch body: the batch's HLL register partial under its
-    epoch partition (writer-scoped dynamic overwrite -> replay-safe)."""
-    (
-        hll_sketch(
-            batch_df, col, group_cols=group_cols, p=p, base_hash=base_hash
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+) -> EpochFold:
+    """The maintained HLL register table (max)."""
+    return EpochFold(
+        lambda df: hll_sketch(
+            df, col, group_cols=group_cols, p=p, base_hash=base_hash
+        ),
+        keys=(*group_cols, "bucket"),
+        folds=(("max_rho", "max"),),
     )
 
 
-def stream_hll(
-    stream_df: DataFrame, table_path: str, *, checkpoint_dir: str,
-    col: str, group_cols: tuple[str, ...] = (),
-    p: int = 12, base_hash: str = "sha60",
-):
-    """Attach HLL register maintenance to a stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_hll_batch(
-                df, eid, table_path, col=col, group_cols=group_cols,
-                p=p, base_hash=base_hash,
-            )
-        )
-        .start()
-    )
-
-
-def read_hll(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fold epoch partials to the current register table (max)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("max_rho").alias("max_rho"))
-    )
-
-
-def apply_cms_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
+def cms_fold(
     *, col: str, group_cols: tuple[str, ...] = (),
     depth: int = 4, width: int = 1 << 12, base_hash: str = "sha60",
     weight_col: str | None = None,
-) -> None:
-    """foreachBatch body: the batch's CMS counter partial under its
-    epoch partition. ``weight_col`` names an integer column to count
-    by (resolved to a Column here so the batch fn stays picklable)."""
-    (
-        cms_sketch(
-            batch_df, col, group_cols=group_cols, depth=depth,
-            width=width, base_hash=base_hash,
+) -> EpochFold:
+    """The maintained CMS counter table (sum). ``weight_col`` names an
+    integer column to count by (weighted CMS: token counts etc.)."""
+    return EpochFold(
+        lambda df: cms_sketch(
+            df, col, group_cols=group_cols, depth=depth, width=width,
+            base_hash=base_hash,
             weight=None if weight_col is None else F.col(weight_col),
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+        ),
+        keys=(*group_cols, "row", "bucket"),
+        folds=(("cnt", "sum"),),
     )
 
 
-def stream_cms(
-    stream_df: DataFrame, table_path: str, *, checkpoint_dir: str,
-    col: str, group_cols: tuple[str, ...] = (),
-    depth: int = 4, width: int = 1 << 12, base_hash: str = "sha60",
-    weight_col: str | None = None,
-):
-    """Attach CMS counter maintenance to a stream. ``weight_col``
-    (optional) names an integer column so weighted CMS maintenance
-    (token counts etc.) is reachable from the streaming path too."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_cms_batch(
-                df, eid, table_path, col=col, group_cols=group_cols,
-                depth=depth, width=width, base_hash=base_hash,
-                weight_col=weight_col,
-            )
-        )
-        .start()
-    )
-
-
-def read_cms(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fold epoch partials to the current counter table (sum)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy(*group_cols, "row", "bucket")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def _compact(
-    spark: SparkSession, table_path: str, folder,
-) -> None:
-    folded = folder(spark, table_path).withColumn(
-        "_epoch", F.lit(-1)
-    ).localCheckpoint(eager=True)
-    # Static overwrite: the fold must replace the WHOLE table (see
-    # module docstring / compact_dsir_model).
-    (
-        folded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("_epoch")
-        .parquet(table_path)
-    )
-
-
-def compact_hll(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> None:
-    """Fold accumulated epochs into one ``_epoch=-1`` base partition;
-    run with the stream paused."""
-    _compact(
-        spark, table_path,
-        lambda s, t: read_hll(s, t, group_cols=group_cols),
-    )
-
-
-def compact_cms(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> None:
-    """CMS compaction: same fold-to-base layout."""
-    _compact(
-        spark, table_path,
-        lambda s, t: read_cms(s, t, group_cols=group_cols),
-    )
-
-
-def apply_bloom_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
+def bloom_fold(
     *, col: str, group_cols: tuple[str, ...] = (),
     n_bits: int = 1 << 20, k: int = 3, base_hash: str = "sha60",
-) -> None:
-    """foreachBatch body: the batch's Bloom word partial under its
-    epoch partition. bit_or is commutative AND idempotent (like HLL's
-    max, unlike CMS's sum), so replayed epochs can't corrupt state
-    even before the overwrite lands."""
-    (
-        bloom_sketch(
-            batch_df, col, group_cols=group_cols, n_bits=n_bits,
-            k=k, base_hash=base_hash,
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+) -> EpochFold:
+    """The maintained Bloom word table (bit_or) -- the streaming half
+    of membership tracking ("have we already ingested this URL /
+    document fingerprint")."""
+    return EpochFold(
+        lambda df: bloom_sketch(
+            df, col, group_cols=group_cols, n_bits=n_bits, k=k,
+            base_hash=base_hash,
+        ),
+        keys=(*group_cols, "word"),
+        folds=(("bits", "bit_or"),),
     )
 
 
-def stream_bloom(
-    stream_df: DataFrame, table_path: str, *, checkpoint_dir: str,
-    col: str, group_cols: tuple[str, ...] = (),
-    n_bits: int = 1 << 20, k: int = 3, base_hash: str = "sha60",
-):
-    """Attach Bloom word-table maintenance to a stream -- the
-    streaming half of membership tracking (e.g. "have we already
-    ingested this URL/document fingerprint")."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_bloom_batch(
-                df, eid, table_path, col=col, group_cols=group_cols,
-                n_bits=n_bits, k=k, base_hash=base_hash,
-            )
-        )
-        .start()
-    )
-
-
-def read_bloom(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fold epoch partials to the current word table (bit_or)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy(*group_cols, "word")
-        .agg(F.expr("bit_or(bits)").cast("long").alias("bits"))
-    )
-
-
-def compact_bloom(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> None:
-    """Bloom compaction: same fold-to-base layout."""
-    _compact(
-        spark, table_path,
-        lambda s, t: read_bloom(s, t, group_cols=group_cols),
-    )
-
-
-def apply_histogram_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
-    *, col: str, group_cols: tuple[str, ...] = (),
+def histogram_fold(
+    *, col: str | Column, group_cols: tuple[str, ...] = (),
     lo: int, hi: int, n_bins: int = 128,
-) -> None:
-    """foreachBatch body: the batch's histogram partial under its
-    epoch partition (additive like CMS: each row lands in exactly one
-    epoch, the read-time fold sums counters)."""
-    (
-        histogram_sketch(
-            batch_df, col, group_cols=group_cols,
-            lo=lo, hi=hi, n_bins=n_bins,
-        )
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
-    )
-
-
-def stream_histogram(
-    stream_df: DataFrame, table_path: str, *, checkpoint_dir: str,
-    col: str, group_cols: tuple[str, ...] = (),
-    lo: int, hi: int, n_bins: int = 128,
-):
-    """Attach equi-width histogram maintenance to a stream -- live
-    distribution monitoring (latency/score/price curves) with the
-    same bounded-counter economics as the batch sketch."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_histogram_batch(
-                df, eid, table_path, col=col, group_cols=group_cols,
-                lo=lo, hi=hi, n_bins=n_bins,
-            )
-        )
-        .start()
-    )
-
-
-def read_histogram(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fold epoch partials to the current bin table (sum)."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-
-
-def compact_histogram(
-    spark: SparkSession, table_path: str,
-    *, group_cols: tuple[str, ...] = (),
-) -> None:
-    """Histogram compaction: same fold-to-base layout."""
-    _compact(
-        spark, table_path,
-        lambda s, t: read_histogram(s, t, group_cols=group_cols),
+) -> EpochFold:
+    """The maintained equi-width histogram bin table (sum) -- live
+    distribution monitoring (latency / score / price curves)."""
+    return EpochFold(
+        lambda df: histogram_sketch(
+            df, col, group_cols=group_cols, lo=lo, hi=hi, n_bins=n_bins
+        ),
+        keys=(*group_cols, "bin"),
+        folds=(("cnt", "sum"),),
     )

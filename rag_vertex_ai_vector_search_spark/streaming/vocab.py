@@ -1,29 +1,20 @@
-"""Streaming vocabulary maintenance: word counts kept fresh per
-micro-batch, so tokenizer corpus-prep (vocab coverage, BPE pair stats)
-reads an incrementally-maintained table instead of rescanning the
-corpus.
+"""Streaming vocabulary maintenance: (word, n) counts kept fresh per
+micro-batch (an ``EpochFold``, see streaming/epoch_fold.py), so
+tokenizer corpus-prep (vocab coverage, BPE pair stats) reads a
+maintained table instead of rescanning the corpus.
 
-Same exactly-once-by-layout design as streaming/rollup.py: each
-micro-batch reduces to PARTIAL (word, n) counts written under
-``_epoch=<epoch_id>`` with dynamic partition overwrite -- a replayed
-epoch overwrites its own partition wholesale, so at-least-once
-foreachBatch delivery still yields exactly-once table contents. Word
-counts are purely additive, so the read-time fold is one sum per word
-and the folded table is bit-equal to the batch count by construction.
-
-At 100 TB the partial per batch is vocabulary-sized (bounded by
-distinct words in the batch, with map-side combine doing the heavy
-lifting), and ``compact_vocab`` folds accumulated epochs into a base
-partition to bound read amplification -- identical maintenance story
-to the rollup.
+Fold algebra: word counts are purely additive, so the fold is one sum
+per word. At 100 TB the partial per batch is bounded by the batch's
+distinct words, with map-side combine doing the heavy lifting.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text
+from .epoch_fold import EpochFold
 
 
 def vocab_partial(batch_df: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -39,60 +30,10 @@ def vocab_partial(batch_df: DataFrame, *, text_col: str = "text") -> DataFrame:
     )
 
 
-def apply_vocab_batch(
-    batch_df: DataFrame, epoch_id: int, table_path: str,
-    *, text_col: str = "text",
-) -> None:
-    """foreachBatch body: write the batch's partial under its epoch
-    partition. The writer-level dynamic-overwrite option (NOT a session
-    conf -- no leakage into other writes) makes a replayed epoch
-    overwrite only its own partition: replay-idempotent."""
-    (
-        vocab_partial(batch_df, text_col=text_col)
-        .withColumn("_epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(table_path)
+def vocab_fold(*, text_col: str = "text") -> EpochFold:
+    """The maintained (word, n) table."""
+    return EpochFold(
+        lambda df: vocab_partial(df, text_col=text_col),
+        keys=("word",),
+        folds=(("n", "sum"),),
     )
-
-
-def stream_vocab_counts(
-    stream_df: DataFrame, table_path: str, *,
-    checkpoint_dir: str, text_col: str = "text",
-):
-    """Attach the vocab maintenance to a document stream."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            lambda df, eid: apply_vocab_batch(
-                df, eid, table_path, text_col=text_col
-            )
-        )
-        .start()
-    )
-
-
-def read_vocab(spark: SparkSession, table_path: str) -> DataFrame:
-    """Fold all epoch partials to the current (word, n) table."""
-    return (
-        spark.read.parquet(table_path)
-        .groupBy("word")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def compact_vocab(spark: SparkSession, table_path: str) -> None:
-    """Fold accumulated epoch partitions into one base partition
-    (``_epoch=-1``), bounding read amplification. Run with the stream
-    paused (same caveat and same Delta/Iceberg seam as the rollup)."""
-    folded = (
-        read_vocab(spark, table_path)
-        .withColumn("_epoch", F.lit(-1))
-        .localCheckpoint(eager=True)  # cut lineage off the replaced files
-    )
-    # Static overwrite (the default; the incremental writer's dynamic
-    # mode is writer-scoped, not session-scoped) so stale epoch
-    # partitions are dropped, not kept alongside the new base.
-    folded.write.mode("overwrite").partitionBy("_epoch").parquet(table_path)

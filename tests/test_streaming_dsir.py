@@ -12,12 +12,7 @@ from rag_vertex_ai_vector_search_spark.operators.importance import (
     hashed_gram_bucket_counts,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.dsir_stream import (
-    apply_dsir_batch,
-    compact_dsir_model,
-    read_dsir_model,
-    stream_dsir_model,
-)
+from rag_vertex_ai_vector_search_spark.streaming.dsir_stream import dsir_fold
 
 import pytest
 
@@ -27,6 +22,7 @@ pytestmark = pytest.mark.full
 
 
 B = 512  # small bucket space keeps the fixture tables tiny
+DSIR = dsir_fold(n_buckets=B)
 
 
 def _assert_same(a, b):
@@ -49,7 +45,7 @@ def test_stream_dsir_model_matches_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(docs.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_dsir_model(stream, table, checkpoint_dir=ckpt, n_buckets=B)
+    q = DSIR.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -57,7 +53,7 @@ def test_stream_dsir_model_matches_batch(spark, sf_smoke, tmp_path):
 
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
-    _assert_same(read_dsir_model(spark, table), _batch_model(docs))
+    _assert_same(DSIR.read(spark, table), _batch_model(docs))
 
 
 def test_dsir_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
@@ -68,16 +64,11 @@ def test_dsir_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
         "doc_id", "text", "lang"
     )
     table = str(tmp_path / "model")
-    apply_dsir_batch(
-        docs.filter(F.col("doc_id") % 2 == 0), 0, table, n_buckets=B
-    )
-    apply_dsir_batch(
-        docs.filter(F.col("doc_id") % 2 == 1), 1, table, n_buckets=B
-    )
-    apply_dsir_batch(
-        docs.filter(F.col("doc_id") % 2 == 1), 1, table, n_buckets=B
-    )  # at-least-once replay
-    maintained = read_dsir_model(spark, table)
+    DSIR.apply(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
+    DSIR.apply(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    # at-least-once replay
+    DSIR.apply(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    maintained = DSIR.read(spark, table)
     _assert_same(maintained, _batch_model(docs))
 
     target = docs.filter(F.col("lang") == "en")
@@ -92,13 +83,11 @@ def test_dsir_compaction_folds_epochs(spark, sf_smoke, tmp_path):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "model")
     for i in range(4):
-        apply_dsir_batch(
-            docs.filter(F.col("doc_id") % 4 == i), i, table, n_buckets=B
-        )
-    expected = read_dsir_model(spark, table).collect()
+        DSIR.apply(docs.filter(F.col("doc_id") % 4 == i), i, table)
+    expected = DSIR.read(spark, table).collect()
 
-    compact_dsir_model(spark, table)
+    DSIR.compact(spark, table)
     dirs = sorted(glob.glob(table + "/_epoch=*"))
     assert dirs == [table + "/_epoch=-1"]
-    after = read_dsir_model(spark, table)
+    after = DSIR.read(spark, table)
     _assert_same(after, spark.createDataFrame(expected, after.schema))

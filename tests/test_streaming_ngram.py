@@ -11,12 +11,10 @@ from rag_vertex_ai_vector_search_spark.operators.lm_quality import (
     trigram_surprisal,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.ngram import (
-    apply_ngram_batch,
-    compact_ngrams,
-    read_ngram_counts,
-    stream_ngram_counts,
+from rag_vertex_ai_vector_search_spark.streaming.linestats import (
+    line_df_fold,
 )
+from rag_vertex_ai_vector_search_spark.streaming.ngram import ngram_fold
 
 import pytest
 
@@ -24,6 +22,8 @@ import pytest
 # the full suite still runs before a round is declared done.
 pytestmark = pytest.mark.full
 
+NGRAM = ngram_fold()
+LINE_DF = line_df_fold()
 
 
 def _assert_same(a, b):
@@ -46,7 +46,7 @@ def test_stream_ngrams_match_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(docs.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_ngram_counts(stream, table, checkpoint_dir=ckpt)
+    q = NGRAM.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -54,7 +54,7 @@ def test_stream_ngrams_match_batch(spark, sf_smoke, tmp_path):
 
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
-    _assert_same(read_ngram_counts(spark, table), _batch_counts(docs))
+    _assert_same(NGRAM.read(spark, table), _batch_counts(docs))
 
 
 def test_ngram_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
@@ -65,10 +65,10 @@ def test_ngram_replay_idempotent_and_scorer_parity(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "ngrams")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
-    apply_ngram_batch(first, 0, table)
-    apply_ngram_batch(second, 1, table)
-    apply_ngram_batch(second, 1, table)  # at-least-once replay
-    counts = read_ngram_counts(spark, table)
+    NGRAM.apply(first, 0, table)
+    NGRAM.apply(second, 1, table)
+    NGRAM.apply(second, 1, table)  # at-least-once replay
+    counts = NGRAM.read(spark, table)
     _assert_same(counts, _batch_counts(docs))
 
     scored_stream = trigram_surprisal(docs, counts=counts)
@@ -100,13 +100,13 @@ def test_ngram_compaction_folds_epochs(spark, sf_smoke, tmp_path):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "ngrams")
     for i in range(4):
-        apply_ngram_batch(docs.filter(F.col("doc_id") % 4 == i), i, table)
-    expected = sorted(map(tuple, read_ngram_counts(spark, table).collect()))
+        NGRAM.apply(docs.filter(F.col("doc_id") % 4 == i), i, table)
+    expected = sorted(map(tuple, NGRAM.read(spark, table).collect()))
 
-    compact_ngrams(spark, table)
+    NGRAM.compact(spark, table)
     files_after = glob.glob(f"{table}/_epoch=*")
     assert [f.rsplit("=", 1)[-1] for f in files_after] == ["-1"]
-    assert sorted(map(tuple, read_ngram_counts(spark, table).collect())) \
+    assert sorted(map(tuple, NGRAM.read(spark, table).collect())) \
         == expected
 
 
@@ -121,10 +121,6 @@ def test_stream_line_df_matches_batch_and_cleaner_parity(
     from rag_vertex_ai_vector_search_spark.operators.dedup import (
         dedup_boilerplate_lines,
     )
-    from rag_vertex_ai_vector_search_spark.streaming.linestats import (
-        apply_line_df_batch,
-        read_line_df,
-    )
 
     footer = "shared footer line"
     rows = [
@@ -133,11 +129,11 @@ def test_stream_line_df_matches_batch_and_cleaner_parity(
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     table = str(tmp_path / "linedf")
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
-    apply_line_df_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    LINE_DF.apply(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
+    LINE_DF.apply(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    LINE_DF.apply(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
 
-    counts = read_line_df(spark, table)
+    counts = LINE_DF.read(spark, table)
     batch = (
         docs.select(
             "doc_id", F.explode(F.split("text", "\n")).alias("line")

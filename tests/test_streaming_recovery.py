@@ -11,10 +11,10 @@ set bit-equals an uninterrupted run.
 
 Two representative queries, per the two streaming execution styles:
 
-- foreachBatch maintenance sink (streaming/vocab.py): recovery comes
-  from epoch-partitioned dynamic overwrite -- a replayed epoch
-  overwrites only its own partition, so at-least-once delivery still
-  yields exactly-once table contents.
+- foreachBatch maintenance sink (streaming/epoch_fold.py, driven by
+  the vocab fold): recovery comes from epoch-partitioned dynamic
+  overwrite -- a replayed epoch overwrites only its own partition, so
+  at-least-once delivery still yields exactly-once table contents.
 - state-store query (streaming/dedup.py::stream_dedup_exact): recovery
   comes from the HDFS-backed state store -- dedup state committed
   before the stop must survive the restart and keep suppressing
@@ -26,20 +26,18 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from rag_vertex_ai_vector_search_spark.streaming import vocab as vocab_mod
+from rag_vertex_ai_vector_search_spark.streaming import epoch_fold
 from rag_vertex_ai_vector_search_spark.streaming.dedup import (
     stream_dedup_exact,
 )
-from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-    read_vocab,
-    stream_vocab_counts,
-)
+from rag_vertex_ai_vector_search_spark.streaming.vocab import vocab_fold
 
 # Slow tier: real micro-batched lifecycles with restarts.
 pytestmark = pytest.mark.full
 
 DOC_SCHEMA = "doc_id long, text string"
 TS_SCHEMA = "doc_id long, ts timestamp, text string"
+VOCAB = vocab_fold()
 
 
 def _ts(s):
@@ -68,7 +66,7 @@ def _vocab_uninterrupted(spark, tmp_path, tag):
     ckpt = str(tmp_path / f"ckpt_{tag}")
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-    q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+    q = VOCAB.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
         for rows in _VOCAB_BATCHES[1:]:
@@ -77,7 +75,7 @@ def _vocab_uninterrupted(spark, tmp_path, tag):
     finally:
         q.stop()
     return sorted(
-        (r.word, r.n) for r in read_vocab(spark, table).collect()
+        (r.word, r.n) for r in VOCAB.read(spark, table).collect()
     )
 
 
@@ -93,7 +91,7 @@ def test_vocab_restart_after_committed_batch_equals_uninterrupted(
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
     for i in range(3):  # three separate query lifetimes, one per batch
         stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-        q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+        q = VOCAB.stream(stream, table, checkpoint_dir=ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -101,7 +99,7 @@ def test_vocab_restart_after_committed_batch_equals_uninterrupted(
         if i < 2:
             _write_batch(spark, _VOCAB_BATCHES[i + 1], DOC_SCHEMA, src)
 
-    got = sorted((r.word, r.n) for r in read_vocab(spark, table).collect())
+    got = sorted((r.word, r.n) for r in VOCAB.read(spark, table).collect())
     want = _vocab_uninterrupted(spark, tmp_path, "uvocab")
     assert got == want
     # each batch committed as its own epoch partition across restarts
@@ -123,7 +121,7 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     ckpt = str(tmp_path / "ckpt_k")
 
     _write_batch(spark, _VOCAB_BATCHES[0], DOC_SCHEMA, src)
-    q = stream_vocab_counts(
+    q = VOCAB.stream(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
         table,
         checkpoint_dir=ckpt,
@@ -133,30 +131,19 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     finally:
         q.stop()
 
-    # Lifetime 2 crashes mid-epoch: the wrapper writes a POISONED
+    # Lifetime 2 crashes mid-epoch: the shared sink writes a POISONED
     # partial (counts x100) under the epoch partition, then dies before
     # foreachBatch returns -- data files landed, checkpoint did not
     # commit. This is the worst-ordered crash for the maintenance sink.
-    real_apply = vocab_mod.apply_vocab_batch
+    real_write = epoch_fold.write_epoch
 
-    def _poison_then_crash(batch_df, epoch_id, table_path, **kw):
-        from pyspark.sql import functions as F
-
-        partial = vocab_mod.vocab_partial(batch_df, **kw).withColumn(
-            "n", F.col("n") * 100
-        )
-        (
-            partial.withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(table_path)
-        )
+    def _poison_then_crash(partial, epoch_id, path):
+        real_write(partial.withColumn("n", F.col("n") * 100), epoch_id, path)
         raise RuntimeError("simulated crash after sink write")
 
-    monkeypatch.setattr(vocab_mod, "apply_vocab_batch", _poison_then_crash)
+    monkeypatch.setattr(epoch_fold, "write_epoch", _poison_then_crash)
     _write_batch(spark, _VOCAB_BATCHES[1], DOC_SCHEMA, src)
-    q = stream_vocab_counts(
+    q = VOCAB.stream(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
         table,
         checkpoint_dir=ckpt,
@@ -170,14 +157,14 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
 
     # the poisoned partial IS on disk at this point (the crash window)
     poisoned = {
-        r.word: r.n for r in read_vocab(spark, table).collect()
+        r.word: r.n for r in VOCAB.read(spark, table).collect()
     }
     assert any(n >= 100 for n in poisoned.values())
 
     # Lifetime 3: restart with the real sink; Spark replays the
     # uncommitted epoch; dynamic overwrite replaces the poisoned
     # partition; then the final batch streams through normally.
-    q = stream_vocab_counts(
+    q = VOCAB.stream(
         spark.readStream.schema(DOC_SCHEMA).parquet(src),
         table,
         checkpoint_dir=ckpt,
@@ -189,7 +176,7 @@ def test_vocab_killed_epoch_is_replayed_and_overwritten(
     finally:
         q.stop()
 
-    got = sorted((r.word, r.n) for r in read_vocab(spark, table).collect())
+    got = sorted((r.word, r.n) for r in VOCAB.read(spark, table).collect())
     want = _vocab_uninterrupted(spark, tmp_path, "uvocab_k")
     assert got == want
 

@@ -6,12 +6,7 @@ import glob
 from pyspark.sql import functions as F
 
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.rollup import (
-    apply_rollup_batch,
-    compact_rollup,
-    read_rollup,
-    stream_rollup_events,
-)
+from rag_vertex_ai_vector_search_spark.streaming.rollup import rollup_fold
 
 import pytest
 
@@ -19,6 +14,7 @@ import pytest
 # the full suite still runs before a round is declared done.
 pytestmark = pytest.mark.full
 
+ROLLUP = rollup_fold()
 
 
 def _batch_hourly(ev):
@@ -49,7 +45,7 @@ def test_stream_rollup_matches_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(ev.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_rollup_events(stream, rollup, checkpoint_dir=ckpt)
+    q = ROLLUP.stream(stream, rollup, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -57,7 +53,7 @@ def test_stream_rollup_matches_batch(spark, sf_smoke, tmp_path):
 
     epochs = spark.read.parquet(rollup).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
-    _assert_same(read_rollup(spark, rollup), _batch_hourly(ev))
+    _assert_same(ROLLUP.read(spark, rollup), _batch_hourly(ev))
 
 
 def test_rollup_replay_is_idempotent(spark, sf_smoke, tmp_path):
@@ -69,12 +65,12 @@ def test_rollup_replay_is_idempotent(spark, sf_smoke, tmp_path):
     rollup = str(tmp_path / "rollup")
     first = ev.filter(F.col("user_id") % 2 == 0)
     second = ev.filter(F.col("user_id") % 2 == 1)
-    apply_rollup_batch(first, 0, rollup)
-    apply_rollup_batch(second, 1, rollup)
-    before = read_rollup(spark, rollup).collect()
+    ROLLUP.apply(first, 0, rollup)
+    ROLLUP.apply(second, 1, rollup)
+    before = ROLLUP.read(spark, rollup).collect()
 
-    apply_rollup_batch(second, 1, rollup)  # replay epoch 1
-    after = read_rollup(spark, rollup)
+    ROLLUP.apply(second, 1, rollup)  # replay epoch 1
+    after = ROLLUP.read(spark, rollup)
     _assert_same(after, spark.createDataFrame(before, after.schema))
     _assert_same(after, _batch_hourly(ev))
 
@@ -86,15 +82,15 @@ def test_compaction_preserves_view_and_folds_epochs(spark, sf_smoke, tmp_path):
     rollup = str(tmp_path / "rollup")
     # many small epochs, as a long-running stream would leave behind
     for i in range(5):
-        apply_rollup_batch(ev.filter(F.col("user_id") % 5 == i), i, rollup)
+        ROLLUP.apply(ev.filter(F.col("user_id") % 5 == i), i, rollup)
     expected = _batch_hourly(ev)
-    _assert_same(read_rollup(spark, rollup), expected)
+    _assert_same(ROLLUP.read(spark, rollup), expected)
 
-    compact_rollup(spark, rollup)
+    ROLLUP.compact(spark, rollup)
     dirs = [d for d in glob.glob(rollup + "/_epoch=*")]
     assert dirs == [rollup + "/_epoch=-1"]
-    _assert_same(read_rollup(spark, rollup), expected)
+    _assert_same(ROLLUP.read(spark, rollup), expected)
 
     # incremental continues on top of the compacted base
-    apply_rollup_batch(ev.limit(0), 99, rollup)  # empty batch: no-op
-    _assert_same(read_rollup(spark, rollup), expected)
+    ROLLUP.apply(ev.limit(0), 99, rollup)  # empty batch: no-op
+    _assert_same(ROLLUP.read(spark, rollup), expected)

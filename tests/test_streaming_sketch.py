@@ -11,14 +11,10 @@ from rag_vertex_ai_vector_search_spark.operators.sketch import (
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
 from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-    apply_cms_batch,
-    apply_hll_batch,
-    compact_cms,
-    compact_hll,
-    read_cms,
-    read_hll,
-    stream_cms,
-    stream_hll,
+    bloom_fold,
+    cms_fold,
+    histogram_fold,
+    hll_fold,
 )
 
 # Slow tier: excluded from the per-commit fast gate (pytest -m "not full");
@@ -28,6 +24,8 @@ pytestmark = pytest.mark.full
 P = 8
 DEPTH = 3
 WIDTH = 64
+HLL = hll_fold(col="word", group_cols=("lang",), p=P)
+CMS = cms_fold(col="word", depth=DEPTH, width=WIDTH)
 
 
 def _assert_same(a, b):
@@ -61,10 +59,7 @@ def test_stream_hll_matches_batch_and_survives_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_hll(
-        stream, table, checkpoint_dir=ckpt, col="word",
-        group_cols=("lang",), p=P,
-    )
+    q = HLL.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -73,7 +68,7 @@ def test_stream_hll_matches_batch_and_survives_compaction(
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2
     batch = hll_sketch(_words(docs), "word", group_cols=("lang",), p=P)
-    maintained = read_hll(spark, table, group_cols=("lang",))
+    maintained = HLL.read(spark, table)
     _assert_same(maintained, batch)
     # estimates off the maintained table == estimates off the batch
     _assert_same(
@@ -81,14 +76,14 @@ def test_stream_hll_matches_batch_and_survives_compaction(
         hll_estimate(batch, group_cols=("lang",), p=P),
     )
 
-    compact_hll(spark, table, group_cols=("lang",))
+    HLL.compact(spark, table)
     folded_epochs = [
         r[0]
         for r in spark.read.parquet(table).select("_epoch").distinct()
         .collect()
     ]
     assert folded_epochs == [-1]
-    _assert_same(read_hll(spark, table, group_cols=("lang",)), batch)
+    _assert_same(HLL.read(spark, table), batch)
 
 
 def test_hll_replay_idempotent(spark, sf_smoke, tmp_path):
@@ -101,11 +96,11 @@ def test_hll_replay_idempotent(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "hll")
     even = _words(docs.filter(F.col("doc_id") % 2 == 0))
     odd = _words(docs.filter(F.col("doc_id") % 2 == 1))
-    apply_hll_batch(even, 0, table, col="word", group_cols=("lang",), p=P)
-    apply_hll_batch(odd, 1, table, col="word", group_cols=("lang",), p=P)
-    apply_hll_batch(odd, 1, table, col="word", group_cols=("lang",), p=P)
+    HLL.apply(even, 0, table)
+    HLL.apply(odd, 1, table)
+    HLL.apply(odd, 1, table)
     _assert_same(
-        read_hll(spark, table, group_cols=("lang",)),
+        HLL.read(spark, table),
         hll_sketch(words, "word", group_cols=("lang",), p=P),
     )
 
@@ -121,35 +116,27 @@ def test_stream_cms_matches_batch_and_replay(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "cms")
     even = _words(docs.filter(F.col("doc_id") % 2 == 0))
     odd = _words(docs.filter(F.col("doc_id") % 2 == 1))
-    apply_cms_batch(
-        even, 0, table, col="word", depth=DEPTH, width=WIDTH
-    )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH
-    )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH
-    )  # at-least-once replay
+    CMS.apply(even, 0, table)
+    CMS.apply(odd, 1, table)
+    CMS.apply(odd, 1, table)  # at-least-once replay
     batch = cms_sketch(words, "word", depth=DEPTH, width=WIDTH)
-    _assert_same(read_cms(spark, table), batch)
+    _assert_same(CMS.read(spark, table), batch)
 
-    compact_cms(spark, table)
+    CMS.compact(spark, table)
     folded_epochs = [
         r[0]
         for r in spark.read.parquet(table).select("_epoch").distinct()
         .collect()
     ]
     assert folded_epochs == [-1]
-    _assert_same(read_cms(spark, table), batch)
+    _assert_same(CMS.read(spark, table), batch)
 
     # and a post-compaction epoch still folds in additively
-    apply_cms_batch(
-        even, 7, table, col="word", depth=DEPTH, width=WIDTH
-    )
+    CMS.apply(even, 7, table)
     twice_even = cms_sketch(
         words.unionByName(even), "word", depth=DEPTH, width=WIDTH
     )
-    _assert_same(read_cms(spark, table), twice_even)
+    _assert_same(CMS.read(spark, table), twice_even)
 
 
 def test_stream_cms_weighted(spark, sf_smoke, tmp_path):
@@ -165,16 +152,13 @@ def test_stream_cms_weighted(spark, sf_smoke, tmp_path):
     table = str(tmp_path / "cmsw")
     even = weighted.filter(F.col("doc_id") % 2 == 0)
     odd = weighted.filter(F.col("doc_id") % 2 == 1)
-    apply_cms_batch(
-        even, 0, table, col="word", depth=DEPTH, width=WIDTH,
-        weight_col="w",
+    weighted_cms = cms_fold(
+        col="word", depth=DEPTH, width=WIDTH, weight_col="w"
     )
-    apply_cms_batch(
-        odd, 1, table, col="word", depth=DEPTH, width=WIDTH,
-        weight_col="w",
-    )
+    weighted_cms.apply(even, 0, table)
+    weighted_cms.apply(odd, 1, table)
     _assert_same(
-        read_cms(spark, table),
+        CMS.read(spark, table),
         cms_sketch(
             weighted, "word", depth=DEPTH, width=WIDTH,
             weight=F.col("w"),
@@ -195,16 +179,13 @@ def test_stream_cms_live_stream(spark, sf_smoke, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_cms(
-        stream, table, checkpoint_dir=ckpt, col="word",
-        depth=DEPTH, width=WIDTH,
-    )
+    q = CMS.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     _assert_same(
-        read_cms(spark, table),
+        CMS.read(spark, table),
         cms_sketch(_words(docs), "word", depth=DEPTH, width=WIDTH),
     )
 
@@ -218,11 +199,9 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
     from rag_vertex_ai_vector_search_spark.operators.sketch import (
         bloom_contains, bloom_sketch,
     )
-    from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        apply_bloom_batch, compact_bloom, read_bloom, stream_bloom,
-    )
 
     kw = dict(n_bits=1 << 16, k=3)
+    bloom = bloom_fold(col="word", **kw)
     docs = load_table(spark, sf_smoke, "documents").select(
         "doc_id", "text", "lang"
     )
@@ -236,9 +215,7 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_bloom(
-        stream, table, checkpoint_dir=ckpt, col="word", **kw
-    )
+    q = bloom.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -246,28 +223,28 @@ def test_stream_bloom_matches_batch_replay_and_compaction(
 
     assert spark.read.parquet(table).select("_epoch").distinct().count() >= 2
     batch = bloom_sketch(_words(docs), "word", **kw)
-    maintained = read_bloom(spark, table)
+    maintained = bloom.read(spark, table)
     _assert_same(maintained, batch)
 
     # replaying already-seen rows (a duplicate delivery under
     # at-least-once) is a no-op: bit_or is idempotent
-    apply_bloom_batch(_words(docs), 99, table, col="word", **kw)
-    _assert_same(read_bloom(spark, table), batch)
+    bloom.apply(_words(docs), 99, table)
+    _assert_same(bloom.read(spark, table), batch)
 
     # membership verdicts identical off maintained vs batch sketches
     # (re-read: the replay overwrote partition files under the old plan)
     probes = _words(docs).select(F.col("word").alias("item")).distinct()
     _assert_same(
-        bloom_contains(read_bloom(spark, table), probes, **kw),
+        bloom_contains(bloom.read(spark, table), probes, **kw),
         bloom_contains(batch, probes, **kw),
     )
 
-    compact_bloom(spark, table)
+    bloom.compact(spark, table)
     assert [
         r[0] for r in
         spark.read.parquet(table).select("_epoch").distinct().collect()
     ] == [-1]
-    _assert_same(read_bloom(spark, table), batch)
+    _assert_same(bloom.read(spark, table), batch)
 
 
 def test_stream_histogram_matches_batch_and_compaction(
@@ -279,11 +256,9 @@ def test_stream_histogram_matches_batch_and_compaction(
     from rag_vertex_ai_vector_search_spark.operators.sketch import (
         histogram_quantiles, histogram_sketch,
     )
-    from rag_vertex_ai_vector_search_spark.streaming.sketch_stream import (
-        compact_histogram, read_histogram, stream_histogram,
-    )
 
     kw = dict(lo=0, hi=12_000_000, n_bins=64)
+    hist = histogram_fold(col="cents", **kw)
     li = load_table(spark, sf_smoke, "lineitem").select(
         (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long").alias("cents")
@@ -298,9 +273,7 @@ def test_stream_histogram_matches_batch_and_compaction(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = stream_histogram(
-        stream, table, checkpoint_dir=ckpt, col="cents", **kw
-    )
+    q = hist.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -308,16 +281,16 @@ def test_stream_histogram_matches_batch_and_compaction(
 
     assert spark.read.parquet(table).select("_epoch").distinct().count() >= 2
     batch = histogram_sketch(li, "cents", **kw)
-    maintained = read_histogram(spark, table)
+    maintained = hist.read(spark, table)
     _assert_same(maintained, batch)
     _assert_same(
         histogram_quantiles(maintained, quantiles=((1, 2), (9, 10)), **kw),
         histogram_quantiles(batch, quantiles=((1, 2), (9, 10)), **kw),
     )
 
-    compact_histogram(spark, table)
+    hist.compact(spark, table)
     assert [
         r[0] for r in
         spark.read.parquet(table).select("_epoch").distinct().collect()
     ] == [-1]
-    _assert_same(read_histogram(spark, table), batch)
+    _assert_same(hist.read(spark, table), batch)

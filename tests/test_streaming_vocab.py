@@ -13,12 +13,7 @@ from rag_vertex_ai_vector_search_spark.operators.tokenizer import (
     vocab_coverage_report,
 )
 from rag_vertex_ai_vector_search_spark.sources import load_table
-from rag_vertex_ai_vector_search_spark.streaming.vocab import (
-    apply_vocab_batch,
-    compact_vocab,
-    read_vocab,
-    stream_vocab_counts,
-)
+from rag_vertex_ai_vector_search_spark.streaming.vocab import vocab_fold
 
 import pytest
 
@@ -26,6 +21,7 @@ import pytest
 # the full suite still runs before a round is declared done.
 pytestmark = pytest.mark.full
 
+VOCAB = vocab_fold()
 
 
 def _batch_counts(docs):
@@ -50,7 +46,7 @@ def test_stream_vocab_matches_batch(spark, sf_smoke, tmp_path):
     stream = spark.readStream.schema(docs.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = stream_vocab_counts(stream, table, checkpoint_dir=ckpt)
+    q = VOCAB.stream(stream, table, checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -59,7 +55,7 @@ def test_stream_vocab_matches_batch(spark, sf_smoke, tmp_path):
     epochs = spark.read.parquet(table).select("_epoch").distinct().count()
     assert epochs >= 2, "stream must have produced multiple micro-batches"
     _assert_same(
-        read_vocab(spark, table),
+        VOCAB.read(spark, table),
         _batch_counts(docs).withColumn("n", F.col("n").cast("long")),
     )
 
@@ -71,10 +67,10 @@ def test_vocab_replay_idempotent_and_tokenizer_parity(spark, sf_smoke, tmp_path)
     table = str(tmp_path / "vocab")
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
-    apply_vocab_batch(first, 0, table)
-    apply_vocab_batch(second, 1, table)
-    apply_vocab_batch(second, 1, table)  # at-least-once replay
-    counts = read_vocab(spark, table)
+    VOCAB.apply(first, 0, table)
+    VOCAB.apply(second, 1, table)
+    VOCAB.apply(second, 1, table)  # at-least-once replay
+    counts = VOCAB.read(spark, table)
     _assert_same(
         counts, _batch_counts(docs).withColumn("n", F.col("n").cast("long"))
     )
@@ -91,18 +87,18 @@ def test_vocab_compaction_folds_epochs(spark, sf_smoke, tmp_path):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "vocab")
     for i in range(4):
-        apply_vocab_batch(docs.filter(F.col("doc_id") % 4 == i), i, table)
-    expected = read_vocab(spark, table).collect()
+        VOCAB.apply(docs.filter(F.col("doc_id") % 4 == i), i, table)
+    expected = VOCAB.read(spark, table).collect()
 
-    compact_vocab(spark, table)
+    VOCAB.compact(spark, table)
     dirs = sorted(glob.glob(table + "/_epoch=*"))
     assert dirs == [table + "/_epoch=-1"]
-    after = read_vocab(spark, table)
+    after = VOCAB.read(spark, table)
     _assert_same(after, spark.createDataFrame(expected, after.schema))
 
 
 def test_train_bpe_reads_maintained_vocab(spark, sf_smoke, tmp_path):
-    """train_bpe(counts=read_vocab(...)) learns the IDENTICAL merges
+    """train_bpe(counts=VOCAB.read(...)) learns the IDENTICAL merges
     as batch self-training -- the streaming-vocab table feeds BPE
     training without re-reading documents."""
     from rag_vertex_ai_vector_search_spark.operators.tokenizer import (
@@ -112,9 +108,9 @@ def test_train_bpe_reads_maintained_vocab(spark, sf_smoke, tmp_path):
 
     docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     table = str(tmp_path / "vocab")
-    apply_vocab_batch(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
-    apply_vocab_batch(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
-    maintained = read_vocab(spark, table)
+    VOCAB.apply(docs.filter(F.col("doc_id") % 2 == 0), 0, table)
+    VOCAB.apply(docs.filter(F.col("doc_id") % 2 == 1), 1, table)
+    maintained = VOCAB.read(spark, table)
     a = [tuple(r) for r in
          train_bpe(None, counts=maintained, n_merges=4)
          .orderBy("merge_rank").collect()]
