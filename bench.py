@@ -196,48 +196,12 @@ def _serving_single_query(spark, sf_dir):
     )
 
 
-def _serving_throughput(spark, sf_dir):
-    """Concurrent-request serving throughput (VERDICT r12 #2): 32
-    distinct queries answered by ONE warm replica through a 16-thread
-    pool (ServingReplica.query_many) -- the reference endpoint's
-    actual shape (config.py:44-50: one warm replica, a request
-    STREAM). The timed value is wall seconds for all 32; q/s =
-    32 / value (measured ~3.6 q/s -- the per-job driver overhead
-    ceiling; the coalesced entry below is the throughput path). Thread-safety (concurrent == sequential bit-equal)
-    is pinned in tests/test_serving.py; this entry measures that the
-    shared-session path actually OVERLAPS requests instead of
-    serializing them (wall must be far under 32 x single-query
-    latency). Returns a one-row LocalRelation summary so the harness's
-    noop sink costs nothing."""
-    import pandas as pd
-
-    _serving_warm_index(spark, sf_dir)
-    reqs = [
-        (910000 + i, f"pricing summary of urgent orders batch {i}")
-        for i in range(32)
-    ]
-    answers = _SERVING_CACHE["replica"].query_many(
-        reqs, max_workers=16, k=10, probe_percent=10.0,
-    )
-    n_rows = sum(len(rows) for _, rows in answers)
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {"n_queries": [len(answers)], "n_rows": [n_rows]}
-        ),
-        "n_queries long, n_rows long",
-    )
-
-
 def _serving_throughput_coalesced(spark, sf_dir):
     """128 requests answered by request COALESCING
-    (ServingReplica.query_batch): one LocalRelation of all embedded
-    vectors, ONE cascade job, results split per query -- the
-    dynamic-batching shape a high-QPS endpoint actually runs; q/s =
-    128 / seconds. The threaded entry above measures per-request
-    isolation on its own 32-request window (fixed ~0.6 s driver/job
-    overhead each -> ~4 q/s ceiling; q/s = 32 / seconds); this one
-    amortizes that overhead across a 4x larger window (~100+ q/s at
-    sf0.1).
+    (ServingReplica.query_batch): one pass over the resident index
+    arrays (or ONE cascade job above the resident budget), results
+    split per query -- the dynamic-batching shape a high-QPS endpoint
+    actually runs; q/s = 128 / seconds.
     Per-query answers are bit-equal to query() -- pinned in
     tests/test_serving.py::test_query_batch_bit_equal."""
     import pandas as pd
@@ -732,13 +696,14 @@ BENCH_QUERIES = [
     # r11: the deployed-endpoint latency story -- ONE warm-replica
     # query (embed + cascade at production probe + hydrate).
     ("serving_single_query", _serving_single_query),
-    # r13: concurrent requests on the same warm replica. The threaded
-    # entry runs 32 requests / 16 threads (q/s = 32 / seconds, the
-    # per-job driver-overhead ceiling); the coalesced entry runs 128
-    # requests in ONE cascade job (q/s = 128 / seconds, the production
-    # path). Window sizes differ on purpose: the thread pool's value is
-    # documenting the ceiling, not racing the coalescer.
-    ("serving_throughput", _serving_throughput),
+    # r13: concurrent requests on the same warm replica, 128 requests
+    # coalesced into one window (q/s = 128 / seconds).
+    # Ledger: the threaded "serving_throughput" entry (32 requests on a
+    # 16-thread ServingReplica.query_many pool) is RETIRED with
+    # query_many itself -- coalesced windows answer the same request
+    # stream, and a resident replica launches no job per request for a
+    # pool to overlap. Its history stays in BENCH_LOCAL.json under the
+    # old name; the name is not reused.
     ("serving_throughput_coalesced", _serving_throughput_coalesced),
     # r14: one STREAM_UPDATE maintenance tick (delta append + replica
     # refresh + query) -- re-warm is a read+cache pass, not a rebuild.

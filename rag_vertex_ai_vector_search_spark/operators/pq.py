@@ -509,6 +509,10 @@ def _adc_frames(
             n_valid = n
         top = min(k, n_valid)
         cand = np.argpartition(s, n - top)[n - top:]
+        # every row tied with the top-th score competes on id, so the
+        # local top-k is the first k by (score desc, id asc) however
+        # the rows were split into blocks
+        cand = np.flatnonzero(s >= s[cand].min())
         order = np.lexsort((ids[cand], -s[cand]))[:top]
         idx = cand[order]
         frames.append(pd.DataFrame({

@@ -2,34 +2,49 @@
 a deployed endpoint keeps min_replica_count=1 warm 2-vCPU replicas and
 answers single queries from resident index state).
 
-``ServingReplica`` holds every request-INDEPENDENT piece resident --
-the cached tree-AH layout (assigned vectors + PQ codes), centroid
-matrix, codebooks, hydration table -- and makes the per-request work
-minimal:
+``ServingReplica`` holds every request-INDEPENDENT piece resident and
+makes the per-request work minimal:
 
 - **Query embedding runs driver-side** through the SAME
   ``hash_embedding_numpy`` the ingest pandas UDF wraps
   (functions/hashing.py:44), so the vector is bit-identical to the
-  batch path while a one-row request pays zero Spark jobs for it (the
-  UDF route costs a fan-out + Arrow + Python-worker round trip --
-  ~0.65 s of pure overhead per request at sf0.1). This mirrors the
-  reference's serving split: queries embed through the same direct
-  model seam the ingest path uses (common/utils/embeddings.py::
-  embed_texts), in-process on the caller, never through a batch job
-  -- its rag/search.py query layer is a stub, so the deployed
-  endpoint's warm-replica semantics (config.py:44-50) are the
-  binding contract.
+  batch path. This mirrors the reference's serving split: queries
+  embed through the same direct model seam the ingest path uses
+  (common/utils/embeddings.py::embed_texts), in-process on the caller,
+  never through a batch job.
 - **Token gate + surrogate key driver-side**, same formulas as
   ``ingest_documents`` (regex token count with ASCII classes matching
   Java's ``\\s``; sha256 of the id string == ``F.sha2`` output).
-- **Probe assignment driver-side** (inside ``ivf_pq_search``'s
-  broadcast path -- the replica passes a local one-row query relation,
-  so the collect that feeds it never launches a job).
+- **Resident index arrays.** When the index -- vectors, PQ codes and
+  hydration table, measured in on-disk bytes -- fits
+  ``RESIDENT_BUDGET_BYTES``, one generation of driver-resident arrays
+  holds it: ids, cluster ids and ``(n, m)`` uint8 codes, the vectors,
+  the code table's kept columns (restricts) and the vector table's
+  scalar columns (crowding), hydration columns aligned by id, and the
+  centroids and codebooks. A request then launches NO Spark job: probe
+  (``_probe_assign_np``) -> LUT (``_lut_for``) -> ADC over the probed
+  leaves' codes (``_adc_frames``, the kernel the executors run) ->
+  exact rerank of the shortlist -> crowding cap and top-k -> hydrate.
+  Only the shortlist's vectors are touched: the scan-compressed-then-
+  verify split of *Highly Efficient String Similarity Search and Join
+  over Compressed Indexes* (ICDE 2022).
+- **Same answers as the Spark cascade, bit for bit.** The rerank folds
+  products left to right in double (``np.cumsum(P, axis=1)[:, -1]``
+  is ``functions/vector.py::dot_product``'s sequential fold; a pairwise
+  ``P.sum(1)`` is not), ties rank (score desc, id asc) as in
+  ``knn._ranked``, and the per-crowd cap applies before top-k. A
+  ``restrict`` Column is evaluated by Spark itself over a per-
+  generation LocalRelation of the resident code columns; the optimizer
+  folds a Filter over a LocalRelation on the driver, so that costs no
+  job either (while those columns stay under
+  ``spark.sql.execution.arrow.localRelationThreshold``).
+- **Above the budget** -- or when the tables cannot be held as arrays
+  (duplicate vector or hydration ids, null or ragged vectors) -- the
+  replica caches the tables and every request runs the Spark cascade,
+  ``ivf_pq_search(method="broadcast")`` + a broadcast hydration join.
 
-The timed request is then just the cascade itself: ADC scan of the
-probed leaf partitions + shortlist rerank + broadcast hydration.
-Request-scale only by design -- batch/data-scale query sets should go
-through ``ivf_pq_search(method="cogroup")`` directly.
+Request-scale only by design: batch/data-scale query sets go through
+``ivf_pq_search(method="cogroup")`` directly.
 """
 
 from __future__ import annotations
@@ -39,7 +54,9 @@ import re
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import DEFAULT_DIM, hash_embedding_numpy
@@ -50,6 +67,12 @@ from .ingest import MAX_TOKENS_PER_TEXT, TokenLimitExceeded
 # \s to [ \t\n\v\f\r] -- the same set Java's \s matches -- so the gate
 # decision is identical to the SQL regexp_count path.
 _TOKEN_RE = re.compile(TOKEN_PATTERN, re.ASCII)
+
+# The largest index a replica holds as driver-resident arrays, in
+# on-disk bytes of its vector, code and hydration tables (vectors
+# barely compress, so this tracks the arrays' memory). Above it the
+# replica serves through the Spark cascade.
+RESIDENT_BUDGET_BYTES = 512 * 1024 * 1024
 
 
 def surrogate_key(doc_id) -> str:
@@ -98,8 +121,8 @@ class ReplicaSource:
     - ``books``: PQCodebooks or a zero-arg callable (callable when
       maintenance may retrain them).
     - ``docs``: hydration-table loader -- a callable(spark) returning
-      a DataFrame (re-invoked and re-cached on every refresh), a
-      static DataFrame (never refreshed), or None.
+      a DataFrame (re-invoked on every refresh), a static DataFrame
+      (never refreshed), or None.
     - ``extra_paths``: additional table paths (e.g. the docs table)
       folded into the staleness fingerprint.
     """
@@ -121,28 +144,209 @@ class ReplicaSource:
         return tuple(paths)
 
 
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` (file bytes for a scan);
+    driver-only, no job."""
+    return int(str(
+        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    ))
+
+
+class _Table:
+    """One source table, opened without collecting it: its size for the
+    budget decision, then either Arrow rows (resident) or a DataFrame
+    (the Spark cascade). A local tx table is sized from its manifest
+    and read as its committed live files with pyarrow -- no job; any
+    other table is a ``read_table_any`` DataFrame sized by the
+    optimizer and collected through Arrow."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        from ..sources.txlog import TxLog, read_table, read_table_any
+
+        self.files = None
+        log = TxLog(spark, path)
+        if log.exists() and log.fs.scheme is None:
+            v = log.current_version()
+            rels = log.live_files(v)
+            if rels and log.schema_at(v) is None:
+                self.base = log.table
+                self.files = [f"{log.table}/{r}" for r in rels]
+                self.nbytes = log.table_stats(v)[1]
+                self._df = lambda: read_table(spark, path, version=v)
+                return
+        df = read_table_any(spark, path)
+        self.nbytes = _plan_bytes(df)
+        self._df = lambda: df
+
+    def df(self) -> DataFrame:
+        return self._df()
+
+    def arrow(self) -> pa.Table:
+        if self.files is None:
+            return self.df().toArrow()
+        import pyarrow.dataset as ds
+
+        return ds.dataset(
+            self.files, format="parquet", partitioning="hive",
+            partition_base_dir=self.base,
+        ).to_table()
+
+
+def _index_of(keys: pa.Array, table: pa.Table, col: str):
+    """Row of ``table`` whose ``col`` equals each key (null where none),
+    or None when ``col`` is not a unique key of the same type family --
+    a join the arrays cannot reproduce row for row."""
+    ids = table.column(col).combine_chunks()
+    if ids.null_count or len(pc.unique(ids)) != len(ids):
+        return None
+    try:
+        ids = ids.cast(keys.type)
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return None
+    return pc.index_in(keys, value_set=ids)
+
+
+def _vector_matrix(col) -> np.ndarray | None:
+    """(n, dim) float matrix of a list<float|double> column, or None
+    when a vector is null, ragged or holds a null."""
+    arr = col.combine_chunks()
+    if arr.null_count or not pa.types.is_floating(arr.type.value_type):
+        return None
+    lengths = pc.list_value_length(arr).to_numpy()
+    flat = arr.flatten()
+    if len(arr) and (lengths.min() != lengths.max() or flat.null_count):
+        return None
+    dim = int(lengths[0]) if len(arr) else 0
+    return flat.to_numpy().reshape(len(arr), dim)
+
+
+@dataclass
+class _Resident:
+    """One generation of driver-resident index arrays. Every array is
+    aligned with the code rows, sorted by id, so a row position orders
+    like its id (the rerank's tie-break)."""
+
+    ids: pa.Array  # code-row ids: the answers' neighbor_id
+    clusters: np.ndarray  # (n,) int64 leaf of each code row
+    codes: np.ndarray  # (n, m) uint8
+    code_cols: pa.Table  # the code table's columns but pq_code
+    has_vec: np.ndarray  # (n,) bool: a vector row holds the id
+    vecs: np.ndarray  # (n, dim) the id's vector (zeros without one)
+    vec_clusters: np.ndarray | None  # (n,) the vector row's leaf
+    vec_cols: pa.Table  # the vector table's scalar columns
+    hydrate: pa.Table | None  # hydration columns (null on a miss)
+    centroids: np.ndarray
+    books: object
+    _restrict_df: DataFrame | None = None
+
+    @classmethod
+    def load(
+        cls, vectors: pa.Table, codes: pa.Table, docs: pa.Table | None,
+        *, id_col: str, vec_col: str, doc_id_col: str,
+        hydrate_cols: tuple[str, ...], centroids: np.ndarray, books,
+    ) -> "_Resident | None":
+        """Align the three tables by id; None when a join of them is
+        not representable as arrays (then the Spark cascade serves)."""
+        need = {id_col, "pq_code", "cluster_id"}
+        if (
+            not need <= set(codes.column_names)
+            or any(codes.column(c).null_count for c in need)
+            or not {id_col, vec_col} <= set(vectors.column_names)
+            or docs is not None
+            and not {doc_id_col, *hydrate_cols} <= set(docs.column_names)
+        ):
+            return None
+        codes = codes.take(pc.sort_indices(codes.column(id_col)))
+        ids = codes.column(id_col).combine_chunks()
+        raw = codes.column("pq_code").combine_chunks()
+        m = books.m
+        if len(raw) and pc.min_max(pc.binary_length(raw)).as_py() != {
+            "min": m, "max": m,
+        }:
+            return None
+        code_mat = np.frombuffer(
+            b"".join(raw.to_pylist()), dtype=np.uint8
+        ).reshape(len(raw), m)
+
+        vec_row = _index_of(ids, vectors, id_col)
+        mat = _vector_matrix(vectors.column(vec_col))
+        if vec_row is None or mat is None:
+            return None
+        has_vec = vec_row.is_valid().to_numpy(zero_copy_only=False)
+        rows = vec_row.fill_null(0).to_numpy()
+        vecs = mat[rows] if len(mat) else np.zeros((len(ids), 0), mat.dtype)
+        vecs[~has_vec] = 0
+        scalar = [
+            c for c in vectors.column_names
+            if c != vec_col and not pa.types.is_nested(
+                vectors.schema.field(c).type
+            )
+        ]
+        vec_cols = vectors.select(scalar).take(vec_row)
+        vec_clusters = None
+        if "cluster_id" in vec_cols.column_names:
+            vec_clusters = (
+                vec_cols.column("cluster_id").combine_chunks()
+                .cast(pa.int64()).fill_null(-1).to_numpy()
+            )
+
+        hydrate = None
+        if docs is not None:
+            doc_row = _index_of(ids, docs, doc_id_col)
+            if doc_row is None:
+                return None
+            hydrate = docs.select(list(hydrate_cols)).take(doc_row)
+        return cls(
+            ids=ids,
+            clusters=codes.column("cluster_id").combine_chunks()
+            .cast(pa.int64()).to_numpy(),
+            codes=code_mat,
+            code_cols=codes.drop_columns(["pq_code"]),
+            has_vec=has_vec, vecs=vecs, vec_clusters=vec_clusters,
+            vec_cols=vec_cols, hydrate=hydrate,
+            centroids=centroids, books=books,
+        )
+
+    def restrict_mask(self, spark: SparkSession, restrict) -> np.ndarray:
+        """Rows passing ``restrict``, evaluated by Spark over a
+        LocalRelation of the code columns (built once per generation;
+        two racing first requests build equal relations, either
+        serves). The Filter folds into the LocalRelation on the
+        driver: no job."""
+        if self._restrict_df is None:
+            self._restrict_df = spark.createDataFrame(
+                self.code_cols.append_column(
+                    "__row", pa.array(np.arange(len(self.ids)))
+                )
+            )
+        hit = [r[0] for r in self._restrict_df.filter(restrict)
+               .select("__row").collect()]
+        mask = np.zeros(len(self.ids), dtype=bool)
+        mask[hit] = True
+        return mask
+
+
 class ServingReplica:
     """Request-independent serving state, built once per process.
 
-    ``ivf_index`` / ``pq_index`` should wrap the CACHED read-back of a
-    saved ``partitionBy("cluster_id")`` layout (the warm-replica
-    startup cost, paid outside any request); ``docs`` is the cached
-    hydration table keyed by ``doc_id_col``.
+    ``ivf_index`` / ``pq_index`` wrap the vector and code tables
+    (ideally the CACHED read-back of a saved ``partitionBy
+    ("cluster_id")`` layout); ``docs`` is the hydration table keyed by
+    ``doc_id_col``. When they fit ``RESIDENT_BUDGET_BYTES`` the
+    constructor collects them once into resident arrays (the
+    warm-replica startup cost, paid outside any request).
 
     A replica constructed with a ``ReplicaSource`` (or via
     ``from_source``) additionally supports the live-index lifecycle:
-    ``is_stale()`` fingerprints the layout's data-file listing against
-    the one captured at the last (re)build, and ``refresh()`` re-reads
-    + re-caches the layout, codebooks, centroids and hydration table
-    in place -- the warm replica sees post-startup
-    ``merge_into_table`` / ``stream_merge_into_ivf_index`` /
-    ``recluster_ivf_index`` results without a restart, closing the
-    reference's STREAM_UPDATE serving semantic. Call ``refresh`` from
-    the maintenance thread between request windows: in-flight queries
-    keep the OLD cached plans, and if the maintenance pass physically
-    replaced files (dynamic partition overwrite), a concurrent query
-    that misses cache can fail on a vanished file -- the same exposure
-    any file-level swap has (the ACID-format seam closes it).
+    ``is_stale()`` fingerprints the layout against the one captured at
+    the last (re)build, and ``refresh()`` re-reads the layout,
+    codebooks, centroids and hydration table in place -- the warm
+    replica sees post-startup ``merge_into_table`` /
+    ``stream_merge_into_ivf_index`` / ``recluster_ivf_index`` results
+    without a restart, closing the reference's STREAM_UPDATE serving
+    semantic. Call ``refresh`` from the maintenance thread between
+    request windows: in-flight queries keep the generation they
+    started with.
     """
 
     def __init__(
@@ -159,13 +363,6 @@ class ServingReplica:
         source: ReplicaSource | None = None,
     ) -> None:
         self.spark = spark
-        # Serving state lives in ONE tuple swapped by a single
-        # reference assignment (atomic in CPython): a request thread
-        # racing refresh() reads either the old generation or the new
-        # one, never a MIXED (new ivf, old pq) pair -- cluster ids
-        # would silently disagree. The ivf/pq/docs attributes are
-        # properties over it for compatibility.
-        self._state = (ivf_index, pq_index, docs)
         self.dim = dim
         self.max_tokens = max_tokens
         self.doc_id_col = doc_id_col
@@ -177,6 +374,24 @@ class ServingReplica:
         self._q_schema = (
             "query_id string, query_vector array<float>"
         )
+        resident = None
+        if ivf_index is not None and pq_index is not None:
+            frames = [ivf_index.assigned, pq_index.codes, docs]
+            if sum(
+                _plan_bytes(f) for f in frames if f is not None
+            ) <= RESIDENT_BUDGET_BYTES:
+                resident = self._load_resident(
+                    *[f if f is None else f.toArrow() for f in frames],
+                    id_col=ivf_index.id_col, vec_col=ivf_index.vec_col,
+                    centroids=ivf_index.centroids, books=pq_index.books,
+                )
+        # Serving state lives in ONE tuple swapped by a single
+        # reference assignment (atomic in CPython): a request thread
+        # racing refresh() reads either the old generation or the new
+        # one, never a MIXED (new ivf, old pq) pair -- cluster ids
+        # would silently disagree. The ivf/pq/docs attributes are
+        # properties over it.
+        self._state = (ivf_index, pq_index, docs, resident)
 
     @property
     def ivf(self):
@@ -197,9 +412,9 @@ class ServingReplica:
         source: ReplicaSource,
         **kwargs,
     ) -> "ServingReplica":
-        """Build a warm replica from a durable layout: reads, caches
-        and fingerprints everything ``source`` describes (the startup
-        cost a deployed endpoint pays once, config.py:44-50)."""
+        """Build a warm replica from a durable layout: reads and
+        fingerprints everything ``source`` describes (the startup cost
+        a deployed endpoint pays once, config.py:44-50)."""
         replica = cls(spark, None, None, None, source=source, **kwargs)
         replica.refresh()
         return replica
@@ -232,17 +447,30 @@ class ServingReplica:
             )
         return self._current_fingerprint() != self._layout_fingerprint
 
+    def _load_resident(self, vectors, codes, docs, **kw):
+        return _Resident.load(
+            vectors, codes, docs, doc_id_col=self.doc_id_col,
+            hydrate_cols=self.hydrate_cols, **kw,
+        )
+
     def refresh(self) -> dict:
-        """Re-warm the resident state from the source layout: re-read
-        (listing-cache refreshed) + re-cache the vectors, codes and
-        hydration table, re-resolve centroids and codebooks, then swap
-        all references at once and unpersist the previous generation.
+        """Re-warm from the source layout and swap the new generation
+        in with one assignment.
+
+        The vector and code tables are opened without collecting them
+        and sized -- a local tx table from its manifest, any other from
+        the optimizer's file-size estimate -- together with the
+        hydration table. Within ``RESIDENT_BUDGET_BYTES`` they are read
+        into resident arrays: a local tx table as its committed live
+        files through pyarrow (no job), any other through one Arrow
+        collect. Above the budget (or when the arrays cannot represent
+        them) they are cached and counted for the Spark cascade, and
+        the previous generation's caches are released.
+
         The fingerprint is taken BEFORE the reads, so a writer
         committing mid-refresh leaves ``is_stale()`` True and the next
         maintenance tick re-warms again (never a silently-missed
-        update). Returns ``{"n_vectors", "n_codes", "n_clusters"}``
-        -- refresh cost is one read+cache pass, a fraction of the cold
-        build (no KMeans/PQ training, no encode)."""
+        update). Returns ``{"n_vectors", "n_codes", "n_clusters"}``."""
         if self.source is None:
             raise ValueError(
                 "refresh() needs a ReplicaSource; this replica was "
@@ -255,12 +483,6 @@ class ServingReplica:
         spark = self.spark
         fingerprint = self._current_fingerprint()
 
-        from ..sources.txlog import read_table_any
-
-        owned: list[DataFrame] = []
-        assigned = read_table_any(spark, src.vectors_path).cache()
-        n_vectors = assigned.count()
-        owned.append(assigned)
         if callable(src.centroids):
             centroids = np.ascontiguousarray(
                 src.centroids(), dtype=np.float64
@@ -271,36 +493,61 @@ class ServingReplica:
             )
         else:
             centroids = load_centroids(spark, src.vectors_path)
-        new_ivf = IVFIndex(
-            assigned=assigned, centroids=centroids,
-            id_col=src.id_col, vec_col=src.vec_col,
-        )
-
-        new_pq = None
-        n_codes = 0
-        if src.codes_path:
-            codes = read_table_any(spark, src.codes_path).cache()
-            n_codes = codes.count()
-            owned.append(codes)
-            books = src.books() if callable(src.books) else src.books
-            new_pq = PQIndex(codes=codes, books=books, id_col=src.id_col)
-
-        new_docs = None
+        books = src.books() if callable(src.books) else src.books
+        new_docs = src.docs
         if callable(src.docs):
             # the docs loader reads paths OUTSIDE vectors/codes: refresh
             # their listing caches too, or the loader can re-read a
             # stale listing after is_stale() correctly flagged the
-            # change and re-cache the old rows (r15, ADVICE r14 low)
+            # change (r15, ADVICE r14 low)
             for p in src.extra_paths:
                 spark.catalog.refreshByPath(p)
-            new_docs = src.docs(spark).cache()
-            new_docs.count()
-            owned.append(new_docs)
-        elif src.docs is not None:
-            new_docs = src.docs
+            new_docs = src.docs(spark)
+
+        vectors = _Table(spark, src.vectors_path)
+        codes = _Table(spark, src.codes_path) if src.codes_path else None
+        resident = None
+        if codes is not None and (
+            vectors.nbytes + codes.nbytes
+            + (_plan_bytes(new_docs) if new_docs is not None else 0)
+            <= RESIDENT_BUDGET_BYTES
+        ):
+            vec_tbl, code_tbl = vectors.arrow(), codes.arrow()
+            resident = self._load_resident(
+                vec_tbl, code_tbl,
+                new_docs.toArrow() if new_docs is not None else None,
+                id_col=src.id_col, vec_col=src.vec_col,
+                centroids=centroids, books=books,
+            )
+
+        owned: list[DataFrame] = []
+        if resident is not None:
+            n_vectors, n_codes = vec_tbl.num_rows, code_tbl.num_rows
+            assigned = code_frame = None
+        else:
+            assigned = vectors.df().cache()
+            n_vectors = assigned.count()
+            owned.append(assigned)
+            n_codes, code_frame = 0, None
+            if codes is not None:
+                code_frame = codes.df().cache()
+                n_codes = code_frame.count()
+                owned.append(code_frame)
+            if callable(src.docs):
+                new_docs = new_docs.cache()
+                new_docs.count()
+                owned.append(new_docs)
+        new_ivf = IVFIndex(
+            assigned=assigned, centroids=centroids,
+            id_col=src.id_col, vec_col=src.vec_col,
+        )
+        new_pq = (
+            PQIndex(codes=code_frame, books=books, id_col=src.id_col)
+            if codes is not None else None
+        )
 
         previous = self._owned_cached
-        self._state = (new_ivf, new_pq, new_docs)  # single atomic swap
+        self._state = (new_ivf, new_pq, new_docs, resident)  # one swap
         self._owned_cached = owned
         self._layout_fingerprint = fingerprint
         # Unpersist the previous generation UNLESS it shares a cache
@@ -337,24 +584,127 @@ class ServingReplica:
             return True
         return False
 
-    def query_vector_df(self, doc_id, text: str) -> DataFrame:
-        """(query_id, query_vector) as a LOCAL one-row relation --
-        built through pandas so the Arrow conversion yields a true
-        LocalRelation (collect() on it is driver-only, no job; a
-        list-based createDataFrame builds a LogicalRDD whose every
-        collect is a defaultParallelism-task job)."""
+    def _query_df(self, keys, vecs) -> DataFrame:
+        """(query_id, query_vector) as a LOCAL relation -- built through
+        pandas so the Arrow conversion yields a true LocalRelation
+        (collect() on it is driver-only, no job; a list-based
+        createDataFrame builds a LogicalRDD whose every collect is a
+        defaultParallelism-task job)."""
         import pandas as pd
 
-        vec = embed_query_text(
-            text, dim=self.dim, max_tokens=self.max_tokens
-        )
         return self.spark.createDataFrame(
             pd.DataFrame({
-                "query_id": [surrogate_key(doc_id)],
-                "query_vector": [[float(x) for x in vec]],
+                "query_id": keys,
+                "query_vector": [[float(x) for x in v] for v in vecs],
             }),
             self._q_schema,
         )
+
+    def query_vector_df(self, doc_id, text: str) -> DataFrame:
+        """One request's (query_id, query_vector) LocalRelation."""
+        return self._query_df(
+            [surrogate_key(doc_id)],
+            [embed_query_text(text, dim=self.dim, max_tokens=self.max_tokens)],
+        )
+
+    def _cascade(self, state, keys, vecs, k, **kw) -> DataFrame:
+        """The Spark route: ``ivf_pq_search(method="broadcast")`` over
+        the cached tables, then the broadcast hydration join."""
+        from .pq import ivf_pq_search
+
+        ivf, pq, docs, _ = state
+        hits = ivf_pq_search(
+            ivf, pq, self._query_df(keys, vecs), k,
+            method="broadcast", **kw,
+        )
+        if docs is None:
+            return hits
+        return hits.join(
+            F.broadcast(docs),
+            hits.neighbor_id == docs[self.doc_id_col],
+            "left",
+        ).select(
+            "query_id", F.col("rank").cast("long").alias("rank"),
+            "neighbor_id", "score", *self.hydrate_cols,
+        )
+
+    def _answer(
+        self, r: _Resident, keys, vecs, k: int, *,
+        probe_percent: float, rerank_candidates: int | None,
+        restrict, per_crowding_k: int | None, crowding_col: str | None,
+    ) -> tuple[pa.Table, list[int]]:
+        """The job-free request over resident arrays: probe -> LUT ->
+        masked ADC -> exact rerank -> crowding cap and top-k ->
+        hydrate. Returns the answer rows (query order, then rank) and
+        the number of rows per query -- the rows ``_cascade`` would
+        return, bit for bit."""
+        from . import ivf as ivf_mod
+        from .pq import _adc_frames, _lut_for
+
+        qmat = np.asarray(vecs, dtype=np.float64)  # float32 -> double, exact
+        nq, n_clusters = len(keys), r.centroids.shape[0]
+        nprobe = max(1, int(round(n_clusters * probe_percent / 100.0)))
+        probes = ivf_mod._probe_assign_np(qmat, r.centroids, nprobe)
+        mask = np.zeros((nq, n_clusters), dtype=bool)
+        mask[np.arange(nq)[:, None], probes] = True
+        probed = np.flatnonzero(mask.any(axis=0))
+        rows = np.isin(r.clusters, probed)
+        if restrict is not None:
+            rows &= r.restrict_mask(self.spark, restrict)
+        pos = np.flatnonzero(rows)
+        frames = _adc_frames(
+            np.arange(nq), _lut_for(qmat, r.books.codebooks), pos,
+            r.codes[pos], 4 * k if rerank_candidates is None
+            else rerank_candidates,
+            probe_mask=mask, clusters=r.clusters[pos],
+        )
+        # the cascade's rerank reads only the probed leaves' vectors
+        vec_ok = r.has_vec if r.vec_clusters is None else (
+            r.has_vec & np.isin(r.vec_clusters, probed)
+        )
+        capped = per_crowding_k is not None and crowding_col is not None
+        crowd = r.vec_cols.column(crowding_col) if crowding_col else None
+        qids, ranks, out_pos, out_score = [], [], [], []
+        counts = [0] * nq
+        for f in frames:
+            qi = int(f["query_id"].iat[0])
+            p = f["neighbor_id"].to_numpy()
+            p = p[vec_ok[p]]
+            score = np.cumsum(
+                qmat[qi] * r.vecs[p].astype(np.float64), axis=1
+            )[:, -1] if len(p) else np.zeros(0)
+            order = np.lexsort((p, -score))
+            if capped:
+                seen: dict = {}
+                keep = []
+                for o, c in zip(order, crowd.take(p[order]).to_pylist()):
+                    seen[c] = seen.get(c, 0) + 1
+                    if seen[c] <= per_crowding_k:
+                        keep.append(o)
+                order = np.asarray(keep, dtype=np.int64)
+            order = order[:k]
+            counts[qi] = len(order)
+            qids += [keys[qi]] * len(order)
+            ranks += range(1, len(order) + 1)
+            out_pos.append(p[order])
+            out_score.append(score[order])
+        at = pa.array(np.concatenate(out_pos or [np.zeros(0, np.int64)]))
+        cols = {
+            "query_id": pa.array(qids, pa.string()),
+            "rank": pa.array(
+                ranks, pa.int32() if r.hydrate is None else pa.int64()
+            ),
+            "neighbor_id": r.ids.take(at),
+            "score": pa.array(
+                np.concatenate(out_score or [np.zeros(0)]), pa.float64()
+            ),
+        }
+        extra = r.hydrate if r.hydrate is not None else r.vec_cols.select(
+            [crowding_col] if crowding_col else []
+        )
+        for c in extra.column_names:
+            cols[c] = extra.column(c).take(at)
+        return pa.table(cols), counts
 
     def query(
         self,
@@ -369,71 +719,17 @@ class ServingReplica:
         crowding_col: str | None = None,
     ) -> DataFrame:
         """One interactive query end-to-end: driver-side embed ->
-        tree-AH cascade over the resident index -> broadcast metadata
-        hydration. Returns (query_id, rank, neighbor_id, score
-        [, hydrate_cols...])."""
-        from .pq import ivf_pq_search
-
-        ivf, pq, docs = self._state  # one generation, racing refresh
-        qvec = self.query_vector_df(doc_id, text)
-        hits = ivf_pq_search(
-            ivf, pq, qvec, k,
-            probe_percent=probe_percent,
-            rerank_candidates=rerank_candidates,
-            method="broadcast",
-            restrict=restrict,
-            per_crowding_k=per_crowding_k,
-            crowding_col=crowding_col,
+        tree-AH cascade over the resident index -> metadata hydration.
+        Returns (query_id, rank, neighbor_id, score[, hydrate_cols...])
+        -- on a resident replica as an Arrow LocalRelation, so neither
+        the call nor its ``collect()`` launches a job."""
+        return self._serve(
+            [(doc_id, text)], k, dict(
+                probe_percent=probe_percent,
+                rerank_candidates=rerank_candidates, restrict=restrict,
+                per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+            ), as_frame=True,
         )
-        if docs is None:
-            return hits
-        return hits.join(
-            F.broadcast(docs),
-            hits.neighbor_id == docs[self.doc_id_col],
-            "left",
-        ).select(
-            "query_id", F.col("rank").cast("long").alias("rank"),
-            "neighbor_id", "score", *self.hydrate_cols,
-        )
-
-    def query_many(
-        self,
-        requests,
-        *,
-        max_workers: int = 8,
-        **query_kwargs,
-    ) -> list:
-        """Answer a STREAM of concurrent interactive requests sharing
-        this replica's SparkSession (the reference endpoint's premise:
-        one warm replica, many in-flight requests -- config.py:44-50
-        min=max=1 replicas). ``requests`` is an iterable of
-        (doc_id, text); each request runs on its own thread as its own
-        Spark job (SparkSession job submission is thread-safe; collect
-        blocks in py4j socket I/O, releasing the GIL, so requests
-        genuinely overlap on the executor slots). Per-request state is
-        all thread-local -- the replica itself holds only immutable
-        request-INDEPENDENT state -- so concurrent answers are
-        bit-equal to sequential ones (pinned in
-        tests/test_serving.py::test_concurrent_queries_bit_equal).
-
-        Returns ``[(doc_id, [Row, ...]), ...]`` in request order.
-        Request-scale only, like ``query``: a data-scale query SET
-        belongs in one ``ivf_pq_search(method="cogroup")`` job, not a
-        thread pool.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
-        reqs = list(requests)
-
-        def _one(req):
-            doc_id, text = req
-            return self.query(
-                text, doc_id=doc_id, **query_kwargs
-            ).collect()
-
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            rows = list(pool.map(_one, reqs))
-        return [(doc_id, r) for (doc_id, _), r in zip(reqs, rows)]
 
     def query_batch(
         self,
@@ -446,69 +742,62 @@ class ServingReplica:
         per_crowding_k: int | None = None,
         crowding_col: str | None = None,
     ) -> list:
-        """Request COALESCING: answer a window of in-flight requests as
-        ONE Spark job. ``query_many`` isolates requests (one job each)
-        but pays per-job driver overhead -- plan analysis, DAGScheduler
-        round-trips, codegen -- ~0.6 s/request regardless of data size,
-        so a thread pool tops out near 4 q/s. Stacking the embedded
-        query vectors into one LocalRelation and running the SAME
-        cascade once amortizes every fixed cost across the window (the
-        classic serving-system dynamic-batching move); per-query
-        results are bit-equal to ``query`` because ``ivf_pq_search``
-        ranks within query_id partitions by construction.
+        """Request COALESCING: answer a window of in-flight
+        ``(doc_id, text)`` requests in one pass -- one driver-side pass
+        over the resident arrays, or one Spark job on the cascade
+        (stacking the embedded vectors into one LocalRelation amortizes
+        every per-job fixed cost across the window). Per-query results
+        are bit-equal to ``query`` because ranking happens within each
+        query id.
 
         Returns ``[(doc_id, [Row, ...]), ...]`` in request order.
         """
-        import pandas as pd
+        return self._serve(
+            list(requests), k, dict(
+                probe_percent=probe_percent,
+                rerank_candidates=rerank_candidates, restrict=restrict,
+                per_crowding_k=per_crowding_k, crowding_col=crowding_col,
+            ), as_frame=False,
+        )
 
-        from .pq import ivf_pq_search
-
-        reqs = list(requests)
+    def _serve(self, reqs, k: int, kw: dict, *, as_frame: bool):
+        """The one request function behind ``query`` and
+        ``query_batch``."""
+        if not reqs:
+            return []
         keys = [surrogate_key(doc_id) for doc_id, _ in reqs]
         if len(set(keys)) != len(keys):
             # two requests sharing a doc_id would share a query_id,
             # and the cascade ranks WITHIN query_id -- their neighbor
             # lists would silently merge. Request ids must be unique
-            # per window (the isolation path query_many has no such
-            # constraint -- each request is its own job).
+            # per window.
             raise ValueError(
                 "duplicate doc_id in query_batch window; request ids "
                 "must be unique per batch"
             )
         vecs = [
-            [float(x) for x in embed_query_text(
-                text, dim=self.dim, max_tokens=self.max_tokens
-            )]
+            embed_query_text(text, dim=self.dim, max_tokens=self.max_tokens)
             for _, text in reqs
         ]
-        qdf = self.spark.createDataFrame(
-            pd.DataFrame({"query_id": keys, "query_vector": vecs}),
-            self._q_schema,
-        )
-        ivf, pq, docs = self._state  # one generation, racing refresh
-        hits = ivf_pq_search(
-            ivf, pq, qdf, k,
-            probe_percent=probe_percent,
-            rerank_candidates=rerank_candidates,
-            method="broadcast",
-            restrict=restrict,
-            per_crowding_k=per_crowding_k,
-            crowding_col=crowding_col,
-        )
-        if docs is not None:
-            hits = hits.join(
-                F.broadcast(docs),
-                hits.neighbor_id == docs[self.doc_id_col],
-                "left",
-            ).select(
-                "query_id", F.col("rank").cast("long").alias("rank"),
-                "neighbor_id", "score", *self.hydrate_cols,
-            )
-        by_key: dict[str, list] = {key: [] for key in keys}
-        for row in hits.collect():
-            by_key[row.query_id].append(row)
-        for rows in by_key.values():
-            rows.sort(key=lambda r: r.rank)
+        state = self._state  # one generation, racing refresh
+        resident = state[3]
+        if resident is None:
+            hits = self._cascade(state, keys, vecs, k, **kw)
+            if as_frame:
+                return hits
+            by_key: dict[str, list] = {key: [] for key in keys}
+            for row in hits.collect():
+                by_key[row.query_id].append(row)
+            for rows in by_key.values():
+                rows.sort(key=lambda r: r.rank)
+            return [(d, by_key[key]) for (d, _), key in zip(reqs, keys)]
+        table, counts = self._answer(resident, keys, vecs, k, **kw)
+        if as_frame:
+            return self.spark.createDataFrame(table)
+        make = Row(*table.column_names)
+        rows = [make(*v) for v in zip(*table.to_pydict().values())]
+        ends = np.cumsum(counts)
         return [
-            (doc_id, by_key[key]) for (doc_id, _), key in zip(reqs, keys)
+            (d, rows[end - n:end])
+            for (d, _), n, end in zip(reqs, counts, ends)
         ]

@@ -11,6 +11,15 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on (its affinity mask): a fixed ``local[32]`` on a 4-CPU host turns
+    every tiny job into 32 tasks."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
 # At 100 TB these become cluster-submit configs; the semantic ones
 # (timezone, Arrow, AQE, parquet pushdown) are scale-independent.
 _BASE_CONFS = {
@@ -32,7 +41,6 @@ _BASE_CONFS = {
     "spark.sql.warehouse.dir": os.path.join(
         tempfile.gettempdir(), "spark_graft_warehouse"
     ),
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
 }
 
 
@@ -41,14 +49,16 @@ def get_spark(app_name: str = "rag_vertex_ai_vector_search_spark",
               extra_confs: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and bench
-    share sizing with the driver harness.
+    ``master`` defaults to ``local[N]`` and the shuffle partitions to
+    N, with N from ``default_cpus()``, so tests and bench share sizing
+    with the driver harness.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
-    for k, v in _BASE_CONFS.items():
+    confs = {**_BASE_CONFS, "spark.sql.shuffle.partitions": cpus}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     if extra_confs:
         for k, v in extra_confs.items():

@@ -1466,9 +1466,18 @@ def read_table(
             f"tx table at {path} is empty at version {v} (no schema "
             "to synthesize an empty DataFrame from)"
         )
+    return read_files(spark, log, rels, log.schema_at(v))
+
+
+def read_files(
+    spark: SparkSession, log: TxLog, rels: list[str], schema=None
+) -> DataFrame:
+    """Read the data files ``rels`` (relative to ``log.table``) as one
+    DataFrame that keeps the hive partition columns -- the file-list
+    read under ``read_table``, shared with writers that read back only
+    part of a snapshot (the touched buckets of a stream merge)."""
     files = [posixpath.join(log.table, r) for r in rels]
     reader = spark.read.option("basePath", log.table)
-    schema = log.schema_at(v)
     if schema is not None:
         reader = reader.schema(schema)
     # An explicit list past spark.sql.sources.parallelPartitionDiscovery

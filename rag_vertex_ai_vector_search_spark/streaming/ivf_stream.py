@@ -33,12 +33,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.ingest import ingest_documents
-from ..operators.upsert import merge_by_key
 from .ingest import DEFAULT_MERGE_BUCKETS, _bucket_expr, _is_path_not_found
 
 
@@ -91,7 +90,9 @@ def stream_merge_into_ivf_index(
     assign = nearest_cluster_udf(centroids)
 
     def _merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        # the tx branch needs no emptiness probe: its touched-bucket
+        # collect comes back empty for an empty epoch
+        if not txlog and batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         result = ingest_documents(
@@ -153,37 +154,43 @@ def stream_merge_into_ivf_index(
 def _sticky_merge(base_touched: DataFrame, updates: DataFrame) -> DataFrame:
     """Keyed keep-latest merge where a key already in the index keeps
     its leaf even if its vector changed (no cross-partition moves
-    under copy-on-write); new keys take the nearest-centroid id."""
-    merged = merge_by_key(base_touched, updates, key="data_point_id")
-    prior = base_touched.select(
-        "data_point_id", F.col("cluster_id").alias("_prior_cluster")
-    )
+    under copy-on-write); new keys take the nearest-centroid id. One
+    window does both: ordered update-first, its first row is the
+    winning row and its last row is the base row (the prior leaf)
+    whenever the key was already indexed."""
+    key = "data_point_id"
+    w = Window.partitionBy(key).orderBy(F.col("_src").desc())
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
-        merged.join(prior, "data_point_id", "left")
-        .withColumn(
-            "cluster_id",
-            F.coalesce(F.col("_prior_cluster"), F.col("cluster_id")),
-        )
-        .drop("_prior_cluster")
+        base_touched.withColumn("_src", F.lit(0))
+        .unionByName(updates.withColumn("_src", F.lit(1)))
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("cluster_id", F.last("cluster_id").over(whole))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_src")
     )
 
 
 def _tx_merge_sticky_batch(
     spark, index_path: str, updates: DataFrame, *, meta: dict
-) -> int:
+) -> int | None:
     """One epoch's sticky IVF merge committed through the commit log:
     read the snapshot's touched-bucket files, sticky-merge, stage the
     replacement partitioned (_bucket, cluster_id), publish. The replay
     guard makes a retried epoch a no-op; a conflicting concurrent
     rewrite raises and lets the streaming engine retry the epoch on
-    the fresh snapshot."""
-    import posixpath
+    the fresh snapshot. An empty epoch touches no bucket and returns
+    None before any log or version is created.
 
+    The staged write reads the base files directly, with no checkpoint
+    in between: they are immutable, and the commit only un-lists
+    them."""
     from ..sources.txlog import (
         TxIdempotentReplay,
         TxLog,
         _delete_files,
         _stage_and_move_in,
+        read_files,
     )
 
     log = TxLog(spark, index_path)
@@ -191,51 +198,40 @@ def _tx_merge_sticky_batch(
         done = log.find_txn(meta["txn_app"], meta["txn_batch"])
         if done is not None:
             return done
-    v = log.ensure()
-    live = log.live_files(v)
-    parts = ("_bucket", "cluster_id")
-    if not live:
-        new = _stage_and_move_in(
-            spark, index_path,
-            updates.repartition(
-                spark.sparkContext.defaultParallelism, *parts
-            ),
-            partition_cols=parts,
-        )
-        try:
-            return log.append_files(new, action="merge-init", meta=meta)
-        except TxIdempotentReplay as r:
-            # a concurrent replay of this epoch won: reap our staged
-            # files and report the winner's version (r17)
-            _delete_files(index_path, new)
-            return r.version
-        except BaseException:
-            _delete_files(index_path, new)
-            raise
     touched = {
         f"_bucket={r[0]}"
         for r in updates.select("_bucket").distinct().collect()
     }
+    if not touched:
+        return None
+    v = log.ensure()
+    live = log.live_files(v)
     inputs = [r for r in live if r.split("/", 1)[0] in touched]
-    if inputs:
-        files = [posixpath.join(log.table, r) for r in inputs]
-        base_touched = spark.read.option(
-            "basePath", log.table
-        ).parquet(*files)
-        merged = _sticky_merge(base_touched, updates)
-    else:
-        merged = updates
+    # the base files were written from epochs of this same shape, so
+    # the updates' schema reads them without a footer-inference job
+    merged = (
+        _sticky_merge(
+            read_files(
+                spark, log, inputs, log.schema_at(v) or updates.schema
+            ),
+            updates,
+        )
+        if inputs else updates
+    )
+    parts = ("_bucket", "cluster_id")
     new = _stage_and_move_in(
         spark,
         index_path,
-        merged.repartition(
-            spark.sparkContext.defaultParallelism, *parts
-        ).localCheckpoint(eager=True),
+        merged.repartition(spark.sparkContext.defaultParallelism, *parts),
         partition_cols=parts,
     )
     try:
+        if not live:
+            return log.append_files(new, action="merge-init", meta=meta)
         return log.replace_files(inputs, new, action="merge", meta=meta)
     except TxIdempotentReplay as r:
+        # a concurrent replay of this epoch won: reap our staged files
+        # and report the winner's version (r17)
         _delete_files(index_path, new)
         return r.version
     except BaseException:

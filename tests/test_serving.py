@@ -171,31 +171,6 @@ def test_replica_restrict_crowding_bit_equal_to_batch(spark, replica):
     assert max(label_counts.values()) <= 2
 
 
-def test_concurrent_queries_bit_equal(spark, replica):
-    """query_many (r13, VERDICT r12 #2): N in-flight requests sharing
-    one SparkSession must return answers BIT-EQUAL to running each
-    query sequentially -- the replica holds only immutable
-    request-independent state, so thread interleaving can never change
-    a score or a rank. Distinct texts per request so a cross-request
-    state leak (e.g. a shared mutable query relation) would flip
-    results, not just reorder them."""
-    rep, _ivf, _pq, _docs = replica
-    reqs = [
-        (910000 + i, f"{QUERY_TEXT} variant {i}") for i in range(8)
-    ]
-    concurrent = rep.query_many(
-        reqs, max_workers=8, k=5, probe_percent=50.0
-    )
-    assert [d for d, _ in concurrent] == [d for d, _ in reqs]
-    for (doc_id, text), (got_id, got_rows) in zip(reqs, concurrent):
-        want = rep.query(
-            text, doc_id=doc_id, k=5, probe_percent=50.0
-        ).collect()
-        assert got_id == doc_id
-        assert sorted(map(tuple, got_rows)) == sorted(map(tuple, want))
-        assert 0 < len(got_rows) <= 5
-
-
 def test_query_batch_bit_equal(spark, replica):
     """query_batch (r13 request coalescing): answers for a window of
     requests answered in ONE job must be bit-equal, per request, to
