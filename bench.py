@@ -125,9 +125,10 @@ _SERVING_CACHE: dict = {}
 def _serving_warm_index(spark, sf_dir):
     """Build + persist the serving replica state ONCE per process: a
     saved partitionBy("cluster_id") tree-AH layout (vectors + PQ
-    codes), read back and cached -- the warm-replica startup cost a
-    deployed endpoint pays before its first query (config.py:44-50),
-    amortized across _serving_single_query invocations."""
+    codes) read back into one replica generation -- the warm-replica
+    startup cost a deployed endpoint pays before its first query
+    (config.py:44-50), amortized across _serving_single_query
+    invocations."""
     import atexit
     import shutil
     import tempfile
@@ -138,8 +139,11 @@ def _serving_warm_index(spark, sf_dir):
         encode_pq,
         train_pq,
     )
+    from rag_vertex_ai_vector_search_spark.operators.serving import (
+        ServingReplica,
+    )
 
-    if "ivf" in _SERVING_CACHE:
+    if "replica" in _SERVING_CACHE:
         return
     base = tempfile.mkdtemp(prefix="bench_serving_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
@@ -150,29 +154,20 @@ def _serving_warm_index(spark, sf_dir):
     books = train_pq(emb, m=8, ksub=16, iters=4, sample_rows=2000)
     pq = encode_pq(ivf.assigned, books, keep_cols=("cluster_id",))
     pq.codes.write.partitionBy("cluster_id").parquet(f"{base}/codes")
-    assigned = spark.read.parquet(f"{base}/vectors")
-    codes = spark.read.parquet(f"{base}/codes")
-    assigned.cache().count()
-    codes.cache().count()
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    docs.cache().count()
-    from rag_vertex_ai_vector_search_spark.operators.serving import (
-        ServingReplica,
-    )
-
-    _SERVING_CACHE.update(
-        ivf=IVFIndex(
-            assigned=assigned, centroids=ivf.centroids,
-            id_col="vec_id", vec_col="embedding",
-        ),
-        pq=PQIndex(codes=codes, books=books, id_col="vec_id"),
-        docs=docs,
-    )
     _SERVING_CACHE["replica"] = ServingReplica(
-        spark, _SERVING_CACHE["ivf"], _SERVING_CACHE["pq"], docs,
-        dim=64, hydrate_cols=("lang", "source"),
+        spark,
+        IVFIndex(
+            assigned=spark.read.parquet(f"{base}/vectors"),
+            centroids=ivf.centroids, id_col="vec_id", vec_col="embedding",
+        ),
+        PQIndex(
+            codes=spark.read.parquet(f"{base}/codes"), books=books,
+            id_col="vec_id",
+        ),
+        docs, dim=64, hydrate_cols=("lang", "source"),
     )
 
 
@@ -182,11 +177,9 @@ def _serving_single_query(spark, sf_dir):
     driver-side embed of one text (the exact function the batch UDF
     wraps, bit-identical vector, zero embed jobs), tree-AH cascade
     search at the reference's production probe
-    (leaf_nodes_to_search_percent=10, common/config.py:38), hydrate
-    metadata via broadcast join. The timed plan scans ONLY probed leaf
-    partitions of the saved code layout (asserted in
-    tests/test_plan_shapes.py::test_serving_query_scans_only_probed_leaves);
-    the index build/cache cost is warm-replica startup, paid once
+    (leaf_nodes_to_search_percent=10, common/config.py:38) and
+    hydration, all job-free over the replica's generation. The index
+    build and generation fill are warm-replica startup, paid once
     outside the timing. tests/test_serving.py pins the replica path
     bit-equal to the ingest-UDF + ivf_pq_search route."""
     _serving_warm_index(spark, sf_dir)
@@ -198,10 +191,10 @@ def _serving_single_query(spark, sf_dir):
 
 def _serving_throughput_coalesced(spark, sf_dir):
     """128 requests answered by request COALESCING
-    (ServingReplica.query_batch): one pass over the resident index
-    arrays (or ONE cascade job above the resident budget), results
-    split per query -- the dynamic-batching shape a high-QPS endpoint
-    actually runs; q/s = 128 / seconds.
+    (ServingReplica.query_batch): one job-free pass over the replica's
+    current generation, results split per query -- the
+    dynamic-batching shape a high-QPS endpoint actually runs;
+    q/s = 128 / seconds.
     Per-query answers are bit-equal to query() -- pinned in
     tests/test_serving.py::test_query_batch_bit_equal."""
     import pandas as pd
@@ -228,7 +221,7 @@ def _serving_replica_refresh(spark, sf_dir):
     (VERDICT r13 #1): append a 100-vector delta into the durable
     layout (vectors + PQ codes), ``refresh()`` the replica, answer one
     query. The timed value is the whole tick; the re-warm itself is
-    one read+cache pass over the layout -- a fraction of the cold
+    one read of the layout into a new generation -- a fraction of the cold
     build (ivf train + pq train + encode + write, the first
     ``serving_single_query`` cost) because nothing retrains or
     re-encodes. Uses its OWN layout dir so the shared serving cache
@@ -286,7 +279,7 @@ def _serving_replica_refresh(spark, sf_dir):
     vecs = np.stack([
         hash_embedding_numpy(f"refresh delta {i}", 64) for i in ids
     ]).astype(np.float64)
-    cents = rep.ivf.centroids
+    cents = rep.centroids
     d2 = (
         (vecs ** 2).sum(axis=1, keepdims=True)
         - 2.0 * vecs @ cents.T
@@ -311,7 +304,7 @@ def _serving_replica_refresh(spark, sf_dir):
     # for this 100-row encode, measured r14); repartition puts the
     # encode in its own clean 1-task stage (one runner, ~1 s).
     encode_pq(
-        delta.repartition(1), rep.pq.books, keep_cols=("cluster_id",)
+        delta.repartition(1), rep.books, keep_cols=("cluster_id",)
     ).codes.write.mode("append").partitionBy(
         "cluster_id"
     ).parquet(f"{base}/codes")

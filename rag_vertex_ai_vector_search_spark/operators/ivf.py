@@ -76,13 +76,25 @@ def save_centroids(spark, index_path: str, centroids: np.ndarray) -> None:
 
 def load_centroids(spark, index_path: str) -> np.ndarray:
     """Read back ``save_centroids``'s sidecar as (n_clusters, dim)
-    float64, ordered by cluster_id."""
-    rows = (
-        spark.read.parquet(index_path.rstrip("/") + "/" + CENTROIDS_SUBDIR)
-        .orderBy("cluster_id")
-        .collect()
-    )
-    return np.asarray([r.centroid for r in rows], dtype=np.float64)
+    float64, ordered by cluster_id. A scheme-less or ``file:`` layout
+    is read with pyarrow (no job, and no Spark listing of a hidden
+    dir); a remote scheme through ``spark.read``."""
+    from ..sources.txlog import _scheme_of, _strip_file_scheme
+
+    path = index_path.rstrip("/") + "/" + CENTROIDS_SUBDIR
+    if _scheme_of(path) in (None, "file"):
+        import pyarrow.dataset as ds
+
+        table = ds.dataset(
+            _strip_file_scheme(path), format="parquet"
+        ).to_table().sort_by("cluster_id")
+        rows = table.column("centroid").to_pylist()
+    else:
+        rows = [
+            r.centroid for r in spark.read.parquet(path)
+            .orderBy("cluster_id").collect()
+        ]
+    return np.asarray(rows, dtype=np.float64)
 
 
 def has_centroids(spark, index_path: str) -> bool:

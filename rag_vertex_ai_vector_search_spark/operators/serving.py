@@ -15,22 +15,24 @@ makes the per-request work minimal:
 - **Token gate + surrogate key driver-side**, same formulas as
   ``ingest_documents`` (regex token count with ASCII classes matching
   Java's ``\\s``; sha256 of the id string == ``F.sha2`` output).
-- **Resident index arrays.** When the index -- vectors, PQ codes and
-  hydration table, measured in on-disk bytes -- fits
-  ``RESIDENT_BUDGET_BYTES``, one generation of driver-resident arrays
-  holds it: ids, cluster ids and ``(n, m)`` uint8 codes, the vectors,
-  the code table's kept columns (restricts) and the vector table's
-  scalar columns (crowding), hydration columns aligned by id, and the
-  centroids and codebooks. A request then launches NO Spark job: probe
-  (``_probe_assign_np``) -> LUT (``_lut_for``) -> ADC over the probed
-  leaves' codes (``_adc_frames``, the kernel the executors run) ->
-  exact rerank of the shortlist -> crowding cap and top-k -> hydrate.
-  Only the shortlist's vectors are touched: the scan-compressed-then-
-  verify split of *Highly Efficient String Similarity Search and Join
-  over Compressed Indexes* (ICDE 2022).
-- **Same answers as the Spark cascade, bit for bit.** The rerank folds
-  products left to right in double (``np.cumsum(P, axis=1)[:, -1]``
-  is ``functions/vector.py::dot_product``'s sequential fold; a pairwise
+- **One generation per (re)build, one request path.** A generation
+  keeps in memory what every request scans: ids, cluster ids and
+  ``(n, m)`` uint8 codes, the code table's kept columns (restricts),
+  the vector table's scalar columns (crowding), the code-row -> vector
+  row map, and the centroids and codebooks. The vectors go to a raw
+  (n, dim) float file and the hydration columns to an Arrow IPC file,
+  per generation, in a replica-local temp dir; both are memory-mapped,
+  so the rerank and hydration read only the shortlist's rows: the
+  scan-compressed-then-verify split of *Highly Efficient String
+  Similarity Search and Join over Compressed Indexes* (ICDE 2022). A
+  request launches NO Spark job: probe (``_probe_assign_np``) -> LUT
+  (``_lut_for``) -> ADC over the probed leaves' codes
+  (``_adc_frames``, the kernel the executors run) -> exact rerank of
+  the shortlist -> crowding cap and top-k -> hydrate.
+- **Same answers as ``ivf_pq_search(method="broadcast")`` + a
+  broadcast hydration join, bit for bit.** The rerank folds products
+  left to right in double (``np.cumsum(P, axis=1)[:, -1]`` is
+  ``functions/vector.py::dot_product``'s sequential fold; a pairwise
   ``P.sum(1)`` is not), ties rank (score desc, id asc) as in
   ``knn._ranked``, and the per-crowd cap applies before top-k. A
   ``restrict`` Column is evaluated by Spark itself over a per-
@@ -38,26 +40,32 @@ makes the per-request work minimal:
   folds a Filter over a LocalRelation on the driver, so that costs no
   job either (while those columns stay under
   ``spark.sql.execution.arrow.localRelationThreshold``).
-- **Above the budget** -- or when the tables cannot be held as arrays
-  (duplicate vector or hydration ids, null or ragged vectors) -- the
-  replica caches the tables and every request runs the Spark cascade,
-  ``ivf_pq_search(method="broadcast")`` + a broadcast hydration join.
+- **What a replica cannot hold, it refuses.** Duplicate vector or
+  hydration ids, null or ragged vectors, and a table over
+  ``RESIDENT_BUDGET_BYTES`` that must sit in memory whole (the code
+  table; the hydration columns; a vector table that is remote or a
+  DataFrame, so it cannot be read batch by batch) make the constructor
+  or ``refresh`` raise with the reason.
 
-Request-scale only by design: batch/data-scale query sets go through
+Request-scale only by design: batch/data-scale query sets -- and
+indexes a replica refuses -- go through
 ``ivf_pq_search(method="cogroup")`` directly.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import re
+import shutil
+import tempfile
+import weakref
 from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.hashing import DEFAULT_DIM, hash_embedding_numpy
 from ..functions.text import TOKEN_PATTERN
@@ -68,11 +76,20 @@ from .ingest import MAX_TOKENS_PER_TEXT, TokenLimitExceeded
 # decision is identical to the SQL regexp_count path.
 _TOKEN_RE = re.compile(TOKEN_PATTERN, re.ASCII)
 
-# The largest index a replica holds as driver-resident arrays, in
-# on-disk bytes of its vector, code and hydration tables (vectors
-# barely compress, so this tracks the arrays' memory). Above it the
-# replica serves through the Spark cascade.
+# The most a generation holds in memory from one table, measured before
+# anything is read: the code table (ids, cluster ids, PQ codes,
+# restrict columns) always, and a table collected whole through Arrow
+# -- the hydration columns, and a vector table that is not local
+# (remote, or a DataFrame). A local vector table is read batch by batch
+# into a memory-mapped file and does not count.
 RESIDENT_BUDGET_BYTES = 512 * 1024 * 1024
+
+# The JVM half of a request -- the answer's Arrow LocalRelation and its
+# collect -- runs ~1.7x slower over a fresh process's first ~150
+# requests while the JIT compiles it (12 ms -> 7 ms per request on a
+# 4-core host), so a new replica runs it this many times before it
+# serves.
+_WARM_UP_REQUESTS = 100
 
 
 def surrogate_key(doc_id) -> str:
@@ -112,7 +129,8 @@ class ReplicaSource:
     - ``vectors_path``: the saved IVF layout (``partitionBy
       ("cluster_id")`` or the streaming ``(_bucket, cluster_id)``).
     - ``codes_path``: the PQ code layout (``encode_pq`` output written
-      ``partitionBy("cluster_id")``); None = no-ADC replica.
+      ``partitionBy("cluster_id")``); None = a replica that tracks the
+      layout and centroids but cannot answer queries.
     - ``centroids``: a (n, dim) matrix, a zero-arg callable returning
       one, or None to read the layout's ``_centroids`` sidecar
       (``operators/ivf.py::save_centroids``; ``recluster_ivf_index``
@@ -144,6 +162,13 @@ class ReplicaSource:
         return tuple(paths)
 
 
+def _refuse(reason: str):
+    raise ValueError(
+        f"ServingReplica cannot hold this index: {reason}; serve it "
+        'with ivf_pq_search(method="cogroup")'
+    )
+
+
 def _plan_bytes(df: DataFrame) -> int:
     """The optimizer's size estimate of ``df`` (file bytes for a scan);
     driver-only, no job."""
@@ -153,109 +178,145 @@ def _plan_bytes(df: DataFrame) -> int:
 
 
 class _Table:
-    """One source table, opened without collecting it: its size for the
-    budget decision, then either Arrow rows (resident) or a DataFrame
-    (the Spark cascade). A local tx table is sized from its manifest
-    and read as its committed live files with pyarrow -- no job; any
-    other table is a ``read_table_any`` DataFrame sized by the
-    optimizer and collected through Arrow."""
+    """One source table (a path or a DataFrame), opened without reading
+    it. A local table -- a tx table's committed live files, or a plain
+    parquet dir's data files (hidden dirs and files excluded, as Spark's
+    reader excludes them) -- is sized from its files and read with
+    pyarrow batch by batch: no job. Any other table is a DataFrame,
+    sized by the optimizer and collected whole through Arrow."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        from ..sources.txlog import TxLog, read_table, read_table_any
+    def __init__(self, spark: SparkSession, src, what: str):
+        from ..sources.txlog import (
+            TxLog,
+            _pyarrow_walk_local,
+            _scheme_of,
+            _strip_file_scheme,
+            read_table_any,
+        )
 
+        self.what = what
         self.files = None
-        log = TxLog(spark, path)
-        if log.exists() and log.fs.scheme is None:
-            v = log.current_version()
-            rels = log.live_files(v)
-            if rels and log.schema_at(v) is None:
-                self.base = log.table
-                self.files = [f"{log.table}/{r}" for r in rels]
-                self.nbytes = log.table_stats(v)[1]
-                self._df = lambda: read_table(spark, path, version=v)
-                return
-        df = read_table_any(spark, path)
-        self.nbytes = _plan_bytes(df)
-        self._df = lambda: df
+        if isinstance(src, str):
+            log = TxLog(spark, src)
+            if log.exists():
+                if log.fs.scheme is None:
+                    v = log.current_version()
+                    rels = log.live_files(v)
+                    if rels and log.schema_at(v) is None:
+                        self.files = [f"{log.table}/{r}" for r in rels]
+                        self.base = log.table
+                        self.nbytes = lambda: log.table_stats(v)[1]
+                        return
+            elif _scheme_of(src) in (None, "file"):
+                self.base = _strip_file_scheme(src).rstrip("/")
+                found = [
+                    (p, size) for p, size, _ in _pyarrow_walk_local(
+                        self.base, prune_hidden=True
+                    )
+                    if not os.path.basename(p).startswith(("_", "."))
+                ]
+                if found:
+                    self.files = [p for p, _ in found]
+                    self.nbytes = lambda: sum(size for _, size in found)
+                    return
+            src = read_table_any(spark, src)
+        self.df = src
+        self.nbytes = lambda: _plan_bytes(src)
 
-    def df(self) -> DataFrame:
-        return self._df()
-
-    def arrow(self) -> pa.Table:
+    def batches(self, *, held: bool = False) -> tuple:
+        """The table's schema and its record batches (lazy for files).
+        ``held``: the caller keeps every batch in memory. A held or
+        collected table is refused over ``RESIDENT_BUDGET_BYTES``."""
+        if (held or self.files is None) and (
+            self.nbytes() > RESIDENT_BUDGET_BYTES
+        ):
+            _refuse(
+                f"its {self.what} table exceeds RESIDENT_BUDGET_BYTES "
+                f"({RESIDENT_BUDGET_BYTES} bytes)"
+                + ("" if self.files else ", and it is not a local table "
+                   "that can be read batch by batch")
+            )
         if self.files is None:
-            return self.df().toArrow()
+            table = self.df.toArrow()
+            return table.schema, table.to_batches()
         import pyarrow.dataset as ds
 
-        return ds.dataset(
+        data = ds.dataset(
             self.files, format="parquet", partitioning="hive",
             partition_base_dir=self.base,
-        ).to_table()
+        )
+        # no read-ahead: a scanner running ahead of the writer buffers
+        # batches (1.6 GB peak vs 0.6 GB over a 2.4 GB table, measured)
+        return data.schema, data.to_batches(
+            batch_readahead=0, fragment_readahead=0
+        )
+
+    def table(self) -> pa.Table:
+        schema, batches = self.batches(held=True)
+        return pa.Table.from_batches(batches, schema)
 
 
-def _index_of(keys: pa.Array, table: pa.Table, col: str):
-    """Row of ``table`` whose ``col`` equals each key (null where none),
-    or None when ``col`` is not a unique key of the same type family --
-    a join the arrays cannot reproduce row for row."""
-    ids = table.column(col).combine_chunks()
+def _index_of(keys: pa.Array, ids: pa.Array, what: str) -> pa.Array:
+    """Row of ``ids`` equal to each key (null where none); refuses when
+    ``ids`` is not a unique key -- a join the arrays cannot reproduce
+    row for row."""
     if ids.null_count or len(pc.unique(ids)) != len(ids):
-        return None
-    try:
-        ids = ids.cast(keys.type)
-    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-        return None
-    return pc.index_in(keys, value_set=ids)
+        _refuse(f"null or duplicate {what} ids")
+    return pc.index_in(keys, value_set=ids.cast(keys.type))
 
 
-def _vector_matrix(col) -> np.ndarray | None:
-    """(n, dim) float matrix of a list<float|double> column, or None
-    when a vector is null, ragged or holds a null."""
-    arr = col.combine_chunks()
-    if arr.null_count or not pa.types.is_floating(arr.type.value_type):
-        return None
-    lengths = pc.list_value_length(arr).to_numpy()
+def _vector_rows(arr: pa.Array, dim: int | None) -> np.ndarray:
+    """A list<float|double> batch column as a zero-copy (rows, dim)
+    matrix; ``dim``, once known, must match. Refuses null, ragged or
+    null-holding vectors."""
     flat = arr.flatten()
-    if len(arr) and (lengths.min() != lengths.max() or flat.null_count):
-        return None
-    dim = int(lengths[0]) if len(arr) else 0
-    return flat.to_numpy().reshape(len(arr), dim)
+    if arr.null_count or flat.null_count:
+        _refuse("null vectors or null vector elements")
+    bounds = pc.min_max(pc.list_value_length(arr)).as_py()
+    if bounds["min"] != bounds["max"] or dim not in (None, bounds["min"]):
+        _refuse("ragged vectors")
+    return flat.to_numpy().reshape(len(arr), bounds["min"])
 
 
 @dataclass
-class _Resident:
-    """One generation of driver-resident index arrays. Every array is
-    aligned with the code rows, sorted by id, so a row position orders
-    like its id (the rerank's tie-break)."""
+class _Generation:
+    """One (re)build of a replica. Every array is aligned with the code
+    rows, sorted by id, so a row position orders like its id (the
+    rerank's tie-break). ``ids`` is None for a replica without a code
+    table: it keeps only the centroids and codebooks."""
 
-    ids: pa.Array  # code-row ids: the answers' neighbor_id
-    clusters: np.ndarray  # (n,) int64 leaf of each code row
-    codes: np.ndarray  # (n, m) uint8
-    code_cols: pa.Table  # the code table's columns but pq_code
-    has_vec: np.ndarray  # (n,) bool: a vector row holds the id
-    vecs: np.ndarray  # (n, dim) the id's vector (zeros without one)
-    vec_clusters: np.ndarray | None  # (n,) the vector row's leaf
-    vec_cols: pa.Table  # the vector table's scalar columns
-    hydrate: pa.Table | None  # hydration columns (null on a miss)
+    dir: str  # this generation's files
     centroids: np.ndarray
     books: object
+    ids: pa.Array | None = None  # code-row ids: the answers' neighbor_id
+    clusters: np.ndarray | None = None  # (n,) int64 leaf of each code row
+    codes: np.ndarray | None = None  # (n, m) uint8
+    code_cols: pa.Table | None = None  # the code table's columns but pq_code
+    vec_row: np.ndarray | None = None  # (n,) vector-file row, -1 = none
+    vec_clusters: np.ndarray | None = None  # (n,) the vector row's leaf
+    vec_cols: pa.Table | None = None  # the vector table's scalar columns
+    vectors: np.ndarray | None = None  # (n_vectors, dim) mapped
+    hydrate: pa.Table | None = None  # mapped; null on a miss
+    n_vectors: int = 0
     _restrict_df: DataFrame | None = None
 
     @classmethod
-    def load(
-        cls, vectors: pa.Table, codes: pa.Table, docs: pa.Table | None,
-        *, id_col: str, vec_col: str, doc_id_col: str,
-        hydrate_cols: tuple[str, ...], centroids: np.ndarray, books,
-    ) -> "_Resident | None":
-        """Align the three tables by id; None when a join of them is
-        not representable as arrays (then the Spark cascade serves)."""
-        need = {id_col, "pq_code", "cluster_id"}
-        if (
-            not need <= set(codes.column_names)
-            or any(codes.column(c).null_count for c in need)
-            or not {id_col, vec_col} <= set(vectors.column_names)
-            or docs is not None
-            and not {doc_id_col, *hydrate_cols} <= set(docs.column_names)
-        ):
-            return None
+    def fill(
+        cls, dir: str, vectors: _Table | None, codes: _Table | None,
+        docs: _Table | None, *, id_col: str, vec_col: str,
+        doc_id_col: str, hydrate_cols: tuple[str, ...],
+        centroids: np.ndarray, books,
+    ) -> "_Generation":
+        """Read the tables into a generation: the code table into
+        memory, the vector table batch by batch into the raw float file
+        ``dir/vectors`` (memory-mapped back), and the hydration
+        columns, aligned by id, into ``dir/hydrate.arrow``."""
+        if codes is None:
+            return cls(dir, centroids, books)
+        codes = codes.table()
+        need = (id_col, "pq_code", "cluster_id")
+        if any(codes.column(c).null_count for c in need):
+            _refuse(f"nulls in the code table's {', '.join(need)}")
         codes = codes.take(pc.sort_indices(codes.column(id_col)))
         ids = codes.column(id_col).combine_chunks()
         raw = codes.column("pq_code").combine_chunks()
@@ -263,26 +324,37 @@ class _Resident:
         if len(raw) and pc.min_max(pc.binary_length(raw)).as_py() != {
             "min": m, "max": m,
         }:
-            return None
+            _refuse(f"codes that are not {m} bytes wide")
         code_mat = np.frombuffer(
             b"".join(raw.to_pylist()), dtype=np.uint8
         ).reshape(len(raw), m)
 
-        vec_row = _index_of(ids, vectors, id_col)
-        mat = _vector_matrix(vectors.column(vec_col))
-        if vec_row is None or mat is None:
-            return None
-        has_vec = vec_row.is_valid().to_numpy(zero_copy_only=False)
-        rows = vec_row.fill_null(0).to_numpy()
-        vecs = mat[rows] if len(mat) else np.zeros((len(ids), 0), mat.dtype)
-        vecs[~has_vec] = 0
-        scalar = [
-            c for c in vectors.column_names
-            if c != vec_col and not pa.types.is_nested(
-                vectors.schema.field(c).type
-            )
-        ]
-        vec_cols = vectors.select(scalar).take(vec_row)
+        schema, batches = vectors.batches()
+        scalar = pa.schema([
+            f for f in schema
+            if f.name != vec_col and not pa.types.is_nested(f.type)
+        ])
+        vec_path = os.path.join(dir, "vectors")
+        kept, dim = [], None
+        with open(vec_path, "wb") as f:
+            for batch in batches:
+                if batch.num_rows:
+                    rows = _vector_rows(batch.column(vec_col), dim)
+                    dim = rows.shape[1]
+                    rows.tofile(f)
+                    kept.append(batch.select(scalar.names))
+        vec_cols = pa.Table.from_batches(kept, scalar)
+        n_vectors = vec_cols.num_rows
+        dtype = schema.field(vec_col).type.value_type.to_pandas_dtype()
+        mapped = np.zeros((n_vectors, dim or 0), dtype)
+        if mapped.size:
+            mapped = np.asarray(np.memmap(
+                vec_path, dtype, mode="r", shape=mapped.shape
+            ))
+        vec_row = _index_of(
+            ids, vec_cols.column(id_col).combine_chunks(), "vector"
+        )
+        vec_cols = vec_cols.take(vec_row)
         vec_clusters = None
         if "cluster_id" in vec_cols.column_names:
             vec_clusters = (
@@ -292,19 +364,24 @@ class _Resident:
 
         hydrate = None
         if docs is not None:
-            doc_row = _index_of(ids, docs, doc_id_col)
-            if doc_row is None:
-                return None
-            hydrate = docs.select(list(hydrate_cols)).take(doc_row)
+            docs = docs.table()
+            doc_row = _index_of(
+                ids, docs.column(doc_id_col).combine_chunks(), "hydration"
+            )
+            aligned = docs.select(list(hydrate_cols)).take(doc_row)
+            hydrate_path = os.path.join(dir, "hydrate.arrow")
+            with pa.ipc.new_file(hydrate_path, aligned.schema) as w:
+                w.write_table(aligned.combine_chunks())
+            hydrate = pa.ipc.open_file(pa.memory_map(hydrate_path)).read_all()
         return cls(
-            ids=ids,
+            dir, centroids, books, ids=ids,
             clusters=codes.column("cluster_id").combine_chunks()
             .cast(pa.int64()).to_numpy(),
             codes=code_mat,
             code_cols=codes.drop_columns(["pq_code"]),
-            has_vec=has_vec, vecs=vecs, vec_clusters=vec_clusters,
-            vec_cols=vec_cols, hydrate=hydrate,
-            centroids=centroids, books=books,
+            vec_row=vec_row.fill_null(-1).to_numpy(),
+            vec_clusters=vec_clusters, vec_cols=vec_cols,
+            vectors=mapped, hydrate=hydrate, n_vectors=n_vectors,
         )
 
     def restrict_mask(self, spark: SparkSession, restrict) -> np.ndarray:
@@ -329,19 +406,18 @@ class _Resident:
 class ServingReplica:
     """Request-independent serving state, built once per process.
 
-    ``ivf_index`` / ``pq_index`` wrap the vector and code tables
-    (ideally the CACHED read-back of a saved ``partitionBy
-    ("cluster_id")`` layout); ``docs`` is the hydration table keyed by
-    ``doc_id_col``. When they fit ``RESIDENT_BUDGET_BYTES`` the
-    constructor collects them once into resident arrays (the
-    warm-replica startup cost, paid outside any request).
+    ``ivf_index`` / ``pq_index`` wrap the vector and code tables;
+    ``docs`` is the hydration table keyed by ``doc_id_col``. The
+    constructor reads them once into a generation and warms the
+    request path on it (the warm-replica startup cost, paid outside
+    any request).
 
     A replica constructed with a ``ReplicaSource`` (or via
     ``from_source``) additionally supports the live-index lifecycle:
     ``is_stale()`` fingerprints the layout against the one captured at
     the last (re)build, and ``refresh()`` re-reads the layout,
-    codebooks, centroids and hydration table in place -- the warm
-    replica sees post-startup ``merge_into_table`` /
+    codebooks, centroids and hydration table into a new generation --
+    the warm replica sees post-startup ``merge_into_table`` /
     ``stream_merge_into_ivf_index`` / ``recluster_ivf_index`` results
     without a restart, closing the reference's STREAM_UPDATE serving
     semantic. Call ``refresh`` from the maintenance thread between
@@ -369,41 +445,29 @@ class ServingReplica:
         self.hydrate_cols = hydrate_cols
         self.source = source
         self._layout_fingerprint: tuple | None = None
-        self._owned_cached: list[DataFrame] = []
-        # The one-row query relation's schema, fixed per replica.
-        self._q_schema = (
-            "query_id string, query_vector array<float>"
-        )
-        resident = None
-        if ivf_index is not None and pq_index is not None:
-            frames = [ivf_index.assigned, pq_index.codes, docs]
-            if sum(
-                _plan_bytes(f) for f in frames if f is not None
-            ) <= RESIDENT_BUDGET_BYTES:
-                resident = self._load_resident(
-                    *[f if f is None else f.toArrow() for f in frames],
-                    id_col=ivf_index.id_col, vec_col=ivf_index.vec_col,
-                    centroids=ivf_index.centroids, books=pq_index.books,
-                )
-        # Serving state lives in ONE tuple swapped by a single
-        # reference assignment (atomic in CPython): a request thread
-        # racing refresh() reads either the old generation or the new
-        # one, never a MIXED (new ivf, old pq) pair -- cluster ids
-        # would silently disagree. The ivf/pq/docs attributes are
-        # properties over it.
-        self._state = (ivf_index, pq_index, docs, resident)
+        # generation files live here; removed with the replica
+        self._dir = tempfile.mkdtemp(prefix="serving-replica-")
+        weakref.finalize(self, shutil.rmtree, self._dir, True)
+        # Serving state is ONE generation swapped by a single reference
+        # assignment (atomic in CPython): a request thread racing
+        # refresh() reads either the old generation or the new one,
+        # never a mix -- cluster ids would silently disagree.
+        self._state: _Generation | None = None
+        if ivf_index is not None:
+            self._swap(self._fill(
+                ivf_index.assigned, pq_index.codes if pq_index else None,
+                docs, id_col=ivf_index.id_col, vec_col=ivf_index.vec_col,
+                centroids=ivf_index.centroids,
+                books=pq_index.books if pq_index else None,
+            ))
 
     @property
-    def ivf(self):
-        return self._state[0]
+    def centroids(self) -> np.ndarray:
+        return self._state.centroids
 
     @property
-    def pq(self):
-        return self._state[1]
-
-    @property
-    def docs(self):
-        return self._state[2]
+    def books(self):
+        return self._state.books
 
     @classmethod
     def from_source(
@@ -418,6 +482,44 @@ class ServingReplica:
         replica = cls(spark, None, None, None, source=source, **kwargs)
         replica.refresh()
         return replica
+
+    def _fill(self, vectors, codes, docs, **kw) -> _Generation:
+        """A new generation from the vector, code and hydration tables
+        (paths or DataFrames; no vectors are read without codes)."""
+        gen_dir = tempfile.mkdtemp(dir=self._dir)
+        try:
+            if docs is not None:
+                docs = _Table(self.spark, docs.select(
+                    *dict.fromkeys((self.doc_id_col, *self.hydrate_cols))
+                ), "hydration")
+            return _Generation.fill(
+                gen_dir,
+                None if codes is None
+                else _Table(self.spark, vectors, "vector"),
+                None if codes is None else _Table(self.spark, codes, "code"),
+                docs, doc_id_col=self.doc_id_col,
+                hydrate_cols=self.hydrate_cols, **kw,
+            )
+        except BaseException:
+            shutil.rmtree(gen_dir, ignore_errors=True)
+            raise
+
+    def _swap(self, generation: _Generation) -> None:
+        """Serve ``generation`` and unlink the previous one's files;
+        a request still holding it keeps reading its maps (POSIX). The
+        first generation also warms the request path."""
+        previous, self._state = self._state, generation  # one swap
+        if previous is not None:
+            shutil.rmtree(previous.dir, ignore_errors=True)
+        elif generation.ids is not None:
+            table, _ = self._answer(
+                generation, [surrogate_key(0)],
+                [embed_query_text("warm-up", dim=self.dim)], 10,
+                probe_percent=10.0, rerank_candidates=None, restrict=None,
+                per_crowding_k=None, crowding_col=None,
+            )
+            for _ in range(_WARM_UP_REQUESTS):
+                self.spark.createDataFrame(table).collect()
 
     def _current_fingerprint(self) -> tuple:
         from ..sources.compact import _listing_snapshot
@@ -447,54 +549,45 @@ class ServingReplica:
             )
         return self._current_fingerprint() != self._layout_fingerprint
 
-    def _load_resident(self, vectors, codes, docs, **kw):
-        return _Resident.load(
-            vectors, codes, docs, doc_id_col=self.doc_id_col,
-            hydrate_cols=self.hydrate_cols, **kw,
-        )
-
     def refresh(self) -> dict:
-        """Re-warm from the source layout and swap the new generation
-        in with one assignment.
+        """Re-warm from the source layout into a new generation, swap
+        it in with one assignment, and unlink the previous
+        generation's files.
 
-        The vector and code tables are opened without collecting them
-        and sized -- a local tx table from its manifest, any other from
-        the optimizer's file-size estimate -- together with the
-        hydration table. Within ``RESIDENT_BUDGET_BYTES`` they are read
-        into resident arrays: a local tx table as its committed live
-        files through pyarrow (no job), any other through one Arrow
-        collect. Above the budget (or when the arrays cannot represent
-        them) they are cached and counted for the Spark cascade, and
-        the previous generation's caches are released.
+        A local table -- a tx table's committed live files, or a plain
+        parquet dir -- is read through pyarrow batch by batch (no job);
+        any other through one Arrow collect. Each table held in memory
+        whole is sized before it is read -- a local table from its
+        files, any other from the optimizer's estimate -- and refused
+        over ``RESIDENT_BUDGET_BYTES``. Inputs the generation cannot
+        represent raise (see the module docstring) and leave the
+        current generation serving.
 
         The fingerprint is taken BEFORE the reads, so a writer
         committing mid-refresh leaves ``is_stale()`` True and the next
         maintenance tick re-warms again (never a silently-missed
-        update). Returns ``{"n_vectors", "n_codes", "n_clusters"}``."""
+        update). Returns ``{"n_vectors", "n_codes", "n_clusters"}``
+        (the counts are 0 without a code table: nothing is read)."""
         if self.source is None:
             raise ValueError(
                 "refresh() needs a ReplicaSource; this replica was "
                 "built from static DataFrames"
             )
-        from .ivf import IVFIndex, load_centroids
-        from .pq import PQIndex
+        from .ivf import load_centroids
 
         src = self.source
         spark = self.spark
         fingerprint = self._current_fingerprint()
 
-        if callable(src.centroids):
-            centroids = np.ascontiguousarray(
-                src.centroids(), dtype=np.float64
-            )
-        elif src.centroids is not None:
-            centroids = np.ascontiguousarray(
-                src.centroids, dtype=np.float64
-            )
-        else:
-            centroids = load_centroids(spark, src.vectors_path)
+        centroids = (
+            src.centroids() if callable(src.centroids) else src.centroids
+        )
+        centroids = (
+            load_centroids(spark, src.vectors_path) if centroids is None
+            else np.ascontiguousarray(centroids, dtype=np.float64)
+        )
         books = src.books() if callable(src.books) else src.books
-        new_docs = src.docs
+        docs = src.docs
         if callable(src.docs):
             # the docs loader reads paths OUTSIDE vectors/codes: refresh
             # their listing caches too, or the loader can re-read a
@@ -502,77 +595,18 @@ class ServingReplica:
             # change (r15, ADVICE r14 low)
             for p in src.extra_paths:
                 spark.catalog.refreshByPath(p)
-            new_docs = src.docs(spark)
+            docs = src.docs(spark)
 
-        vectors = _Table(spark, src.vectors_path)
-        codes = _Table(spark, src.codes_path) if src.codes_path else None
-        resident = None
-        if codes is not None and (
-            vectors.nbytes + codes.nbytes
-            + (_plan_bytes(new_docs) if new_docs is not None else 0)
-            <= RESIDENT_BUDGET_BYTES
-        ):
-            vec_tbl, code_tbl = vectors.arrow(), codes.arrow()
-            resident = self._load_resident(
-                vec_tbl, code_tbl,
-                new_docs.toArrow() if new_docs is not None else None,
-                id_col=src.id_col, vec_col=src.vec_col,
-                centroids=centroids, books=books,
-            )
-
-        owned: list[DataFrame] = []
-        if resident is not None:
-            n_vectors, n_codes = vec_tbl.num_rows, code_tbl.num_rows
-            assigned = code_frame = None
-        else:
-            assigned = vectors.df().cache()
-            n_vectors = assigned.count()
-            owned.append(assigned)
-            n_codes, code_frame = 0, None
-            if codes is not None:
-                code_frame = codes.df().cache()
-                n_codes = code_frame.count()
-                owned.append(code_frame)
-            if callable(src.docs):
-                new_docs = new_docs.cache()
-                new_docs.count()
-                owned.append(new_docs)
-        new_ivf = IVFIndex(
-            assigned=assigned, centroids=centroids,
+        generation = self._fill(
+            src.vectors_path, src.codes_path, docs,
             id_col=src.id_col, vec_col=src.vec_col,
+            centroids=centroids, books=books,
         )
-        new_pq = (
-            PQIndex(codes=code_frame, books=books, id_col=src.id_col)
-            if codes is not None else None
-        )
-
-        previous = self._owned_cached
-        self._state = (new_ivf, new_pq, new_docs, resident)  # one swap
-        self._owned_cached = owned
+        self._swap(generation)
         self._layout_fingerprint = fingerprint
-        # Unpersist the previous generation UNLESS it shares a cache
-        # entry with the new one: Spark's CacheManager keys on the
-        # CANONICALIZED plan, and a re-read of the same path
-        # canonicalizes equal to the old read (refreshByPath already
-        # swapped that entry's file listing in place) -- unpersisting
-        # the old DataFrame would evict the cache the NEW replica is
-        # using, silently de-warming every subsequent query.
-        for df in previous:
-            try:
-                old_plan = df._jdf.queryExecution().analyzed()
-                if any(
-                    old_plan.sameResult(
-                        nw._jdf.queryExecution().analyzed()
-                    )
-                    for nw in owned
-                ):
-                    continue
-            except Exception:  # noqa: BLE001 -- eviction is best-effort
-                pass
-            df.unpersist(blocking=False)
         return {
-            "n_vectors": int(n_vectors),
-            "n_codes": int(n_codes),
+            "n_vectors": generation.n_vectors,
+            "n_codes": 0 if generation.ids is None else len(generation.ids),
             "n_clusters": int(centroids.shape[0]),
         }
 
@@ -584,60 +618,34 @@ class ServingReplica:
             return True
         return False
 
-    def _query_df(self, keys, vecs) -> DataFrame:
-        """(query_id, query_vector) as a LOCAL relation -- built through
-        pandas so the Arrow conversion yields a true LocalRelation
-        (collect() on it is driver-only, no job; a list-based
-        createDataFrame builds a LogicalRDD whose every collect is a
-        defaultParallelism-task job)."""
+    def query_vector_df(self, doc_id, text: str) -> DataFrame:
+        """One request's (query_id, query_vector) as a LOCAL relation --
+        built through pandas so the Arrow conversion yields a true
+        LocalRelation (collect() on it is driver-only, no job; a
+        list-based createDataFrame builds a LogicalRDD whose every
+        collect is a defaultParallelism-task job)."""
         import pandas as pd
 
+        vec = embed_query_text(text, dim=self.dim, max_tokens=self.max_tokens)
         return self.spark.createDataFrame(
             pd.DataFrame({
-                "query_id": keys,
-                "query_vector": [[float(x) for x in v] for v in vecs],
+                "query_id": [surrogate_key(doc_id)],
+                "query_vector": [[float(x) for x in vec]],
             }),
-            self._q_schema,
-        )
-
-    def query_vector_df(self, doc_id, text: str) -> DataFrame:
-        """One request's (query_id, query_vector) LocalRelation."""
-        return self._query_df(
-            [surrogate_key(doc_id)],
-            [embed_query_text(text, dim=self.dim, max_tokens=self.max_tokens)],
-        )
-
-    def _cascade(self, state, keys, vecs, k, **kw) -> DataFrame:
-        """The Spark route: ``ivf_pq_search(method="broadcast")`` over
-        the cached tables, then the broadcast hydration join."""
-        from .pq import ivf_pq_search
-
-        ivf, pq, docs, _ = state
-        hits = ivf_pq_search(
-            ivf, pq, self._query_df(keys, vecs), k,
-            method="broadcast", **kw,
-        )
-        if docs is None:
-            return hits
-        return hits.join(
-            F.broadcast(docs),
-            hits.neighbor_id == docs[self.doc_id_col],
-            "left",
-        ).select(
-            "query_id", F.col("rank").cast("long").alias("rank"),
-            "neighbor_id", "score", *self.hydrate_cols,
+            "query_id string, query_vector array<float>",
         )
 
     def _answer(
-        self, r: _Resident, keys, vecs, k: int, *,
+        self, r: _Generation, keys, vecs, k: int, *,
         probe_percent: float, rerank_candidates: int | None,
         restrict, per_crowding_k: int | None, crowding_col: str | None,
     ) -> tuple[pa.Table, list[int]]:
-        """The job-free request over resident arrays: probe -> LUT ->
+        """The job-free request over one generation: probe -> LUT ->
         masked ADC -> exact rerank -> crowding cap and top-k ->
         hydrate. Returns the answer rows (query order, then rank) and
-        the number of rows per query -- the rows ``_cascade`` would
-        return, bit for bit."""
+        the number of rows per query -- the rows of
+        ``ivf_pq_search(method="broadcast")`` + the broadcast hydration
+        join, bit for bit."""
         from . import ivf as ivf_mod
         from .pq import _adc_frames, _lut_for
 
@@ -648,7 +656,7 @@ class ServingReplica:
         mask = np.zeros((nq, n_clusters), dtype=bool)
         mask[np.arange(nq)[:, None], probes] = True
         probed = np.flatnonzero(mask.any(axis=0))
-        rows = np.isin(r.clusters, probed)
+        rows = np.isin(r.clusters, probed, kind="table")
         if restrict is not None:
             rows &= r.restrict_mask(self.spark, restrict)
         pos = np.flatnonzero(rows)
@@ -658,20 +666,30 @@ class ServingReplica:
             else rerank_candidates,
             probe_mask=mask, clusters=r.clusters[pos],
         )
-        # the cascade's rerank reads only the probed leaves' vectors
-        vec_ok = r.has_vec if r.vec_clusters is None else (
-            r.has_vec & np.isin(r.vec_clusters, probed)
-        )
+        cand = [f["neighbor_id"].to_numpy() for f in frames]
+        allp = np.concatenate(cand or [np.zeros(0, np.int64)])
+        # the batch route's rerank reads only the probed leaves' vectors
+        ok = r.vec_row[allp] >= 0
+        if r.vec_clusters is not None:
+            ok &= np.isin(r.vec_clusters[allp], probed)
+        shortlists = [
+            (int(f["query_id"].iat[0]), p[p_ok]) for f, p, p_ok in zip(
+                frames, cand,
+                np.split(ok, np.cumsum([len(p) for p in cand])[:-1]),
+            )
+        ]
+        # one gather of every shortlisted vector for the whole window
+        mats = r.vectors[r.vec_row[allp[ok]]].astype(np.float64)
         capped = per_crowding_k is not None and crowding_col is not None
         crowd = r.vec_cols.column(crowding_col) if crowding_col else None
         qids, ranks, out_pos, out_score = [], [], [], []
         counts = [0] * nq
-        for f in frames:
-            qi = int(f["query_id"].iat[0])
-            p = f["neighbor_id"].to_numpy()
-            p = p[vec_ok[p]]
+        start = 0
+        for qi, p in shortlists:
+            v = mats[start:start + len(p)]
+            start += len(p)
             score = np.cumsum(
-                qmat[qi] * r.vecs[p].astype(np.float64), axis=1
+                qmat[qi] * v, axis=1
             )[:, -1] if len(p) else np.zeros(0)
             order = np.lexsort((p, -score))
             if capped:
@@ -702,7 +720,7 @@ class ServingReplica:
         extra = r.hydrate if r.hydrate is not None else r.vec_cols.select(
             [crowding_col] if crowding_col else []
         )
-        for c in extra.column_names:
+        for c in extra.schema.names:
             cols[c] = extra.column(c).take(at)
         return pa.table(cols), counts
 
@@ -719,10 +737,10 @@ class ServingReplica:
         crowding_col: str | None = None,
     ) -> DataFrame:
         """One interactive query end-to-end: driver-side embed ->
-        tree-AH cascade over the resident index -> metadata hydration.
-        Returns (query_id, rank, neighbor_id, score[, hydrate_cols...])
-        -- on a resident replica as an Arrow LocalRelation, so neither
-        the call nor its ``collect()`` launches a job."""
+        probe -> ADC -> exact rerank over the current generation -> metadata
+        hydration. Returns (query_id, rank, neighbor_id, score
+        [, hydrate_cols...]) as an Arrow LocalRelation, so neither the
+        call nor its ``collect()`` launches a job."""
         return self._serve(
             [(doc_id, text)], k, dict(
                 probe_percent=probe_percent,
@@ -743,12 +761,10 @@ class ServingReplica:
         crowding_col: str | None = None,
     ) -> list:
         """Request COALESCING: answer a window of in-flight
-        ``(doc_id, text)`` requests in one pass -- one driver-side pass
-        over the resident arrays, or one Spark job on the cascade
-        (stacking the embedded vectors into one LocalRelation amortizes
-        every per-job fixed cost across the window). Per-query results
-        are bit-equal to ``query`` because ranking happens within each
-        query id.
+        ``(doc_id, text)`` requests in one driver-side pass over the
+        current generation (one ADC over the stacked LUTs, one gather
+        of the shortlisted vectors). Per-query results are bit-equal to
+        ``query`` because ranking happens within each query id.
 
         Returns ``[(doc_id, [Row, ...]), ...]`` in request order.
         """
@@ -768,30 +784,25 @@ class ServingReplica:
         keys = [surrogate_key(doc_id) for doc_id, _ in reqs]
         if len(set(keys)) != len(keys):
             # two requests sharing a doc_id would share a query_id,
-            # and the cascade ranks WITHIN query_id -- their neighbor
+            # and ranking happens WITHIN query_id -- their neighbor
             # lists would silently merge. Request ids must be unique
             # per window.
             raise ValueError(
                 "duplicate doc_id in query_batch window; request ids "
                 "must be unique per batch"
             )
+        state = self._state  # one generation, racing refresh
+        if state is None or state.ids is None:
+            raise ValueError(
+                "this replica has no code table (ReplicaSource."
+                "codes_path=None); it tracks the layout but cannot "
+                "answer queries"
+            )
         vecs = [
             embed_query_text(text, dim=self.dim, max_tokens=self.max_tokens)
             for _, text in reqs
         ]
-        state = self._state  # one generation, racing refresh
-        resident = state[3]
-        if resident is None:
-            hits = self._cascade(state, keys, vecs, k, **kw)
-            if as_frame:
-                return hits
-            by_key: dict[str, list] = {key: [] for key in keys}
-            for row in hits.collect():
-                by_key[row.query_id].append(row)
-            for rows in by_key.values():
-                rows.sort(key=lambda r: r.rank)
-            return [(d, by_key[key]) for (d, _), key in zip(reqs, keys)]
-        table, counts = self._answer(resident, keys, vecs, k, **kw)
+        table, counts = self._answer(state, keys, vecs, k, **kw)
         if as_frame:
             return self.spark.createDataFrame(table)
         make = Row(*table.column_names)

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 
 from pyspark.sql import SparkSession
 
@@ -260,7 +261,27 @@ def compact_fragmented(
 def _listing_snapshot(spark: SparkSession, path: str) -> frozenset:
     """Identity of a table dir's data-file set: (relative path, length,
     mtime) per data file. Two snapshots compare equal iff no writer
-    committed between them."""
+    committed between them. Every file counts except ``_``/``.``-named
+    ones, hidden dirs included (the ``_centroids`` sidecar, a writer's
+    ``_temporary`` attempt files). An absolute local path is listed by
+    one pyarrow walk (the py4j listing costs ~0.1 s per call on a
+    churned index), any other path through the Hadoop FileSystem."""
+    from .txlog import _pyarrow_walk_local, _scheme_of, _strip_file_scheme
+
+    root = _strip_file_scheme(path).rstrip("/")
+    if _scheme_of(path) in (None, "file") and os.path.isabs(root):
+
+        def _walk():
+            files = _pyarrow_walk_local(root, prune_hidden=False)
+            return None if files is None else frozenset(
+                (full[len(root):], size, mtime)
+                for full, size, mtime in files
+                if not os.path.basename(full).startswith(("_", "."))
+            )
+
+        snapshot = _retry_listing_race(_walk)
+        if snapshot is not None:
+            return snapshot
     fs, jpath = _fs_and_path(spark, path)
     if not fs.exists(jpath):
         return frozenset()

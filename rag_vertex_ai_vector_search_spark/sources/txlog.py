@@ -148,8 +148,18 @@ def _scheme_of(path: str) -> str | None:
 
 
 def _strip_file_scheme(path: str) -> str:
+    """The local path of a scheme-less or ``file:`` path. A ``file://``
+    URI with an authority (``file://host/x``) names no local path:
+    raise rather than list ``host/x`` or ``//host/x`` and silently find
+    nothing."""
     if path.startswith("file://"):
-        return path[len("file://"):] or "/"
+        rest = path[len("file://"):]
+        if rest and not rest.startswith("/"):
+            raise ValueError(
+                f"{path!r} carries an authority; a local path is "
+                "file:/path or file:///path"
+            )
+        return rest or "/"
     if path.startswith("file:"):
         return path[len("file:"):]
     return path
@@ -174,7 +184,9 @@ def _pyarrow_walk_local(local_root: str, *, prune_hidden: bool):
     ``(plain_local_path, size, mtime_epoch_seconds)`` with the same
     hidden-DIR rule as the serial walks (underscore/dot dir components
     pruned unless hive ``name=value``; file-NAME filtering stays the
-    caller's concern). Returns None when pyarrow is unavailable so
+    caller's concern). Symlinked dirs are skipped, as the serial walks
+    skip them: pyarrow follows them, which would list a linked subtree
+    twice. Returns None when pyarrow is unavailable so
     callers fall back to their serial walk (the checkpoint-sidecar
     precedent)."""
     try:
@@ -192,8 +204,14 @@ def _pyarrow_walk_local(local_root: str, *, prune_hidden: bool):
         # the serial walks tolerate a file-at-root (yield nothing);
         # match them
         return out
+    links = tuple(
+        info.path + "/" for info in infos
+        if info.type == pafs.FileType.Directory and os.path.islink(info.path)
+    )
     for info in infos:
-        if info.type != pafs.FileType.File:
+        if info.type != pafs.FileType.File or (
+            links and info.path.startswith(links)
+        ):
             continue
         rel_dir_parts = info.path[root_len:].split("/")[:-1]
         if prune_hidden and any(
@@ -289,6 +307,8 @@ class _LocalTxFs:
                     ):
                         continue
                     dirs.append(entry.path)
+                elif entry.is_symlink() and entry.is_dir():
+                    continue  # a symlinked dir: never followed
                 else:
                     try:
                         st = entry.stat()
@@ -336,6 +356,8 @@ class _LocalTxFs:
                     yield from self.walk_files(
                         entry.path, prune_hidden=prune_hidden
                     )
+                elif entry.is_symlink() and entry.is_dir():
+                    continue  # a symlinked dir: never followed
                 else:
                     try:
                         st = entry.stat()
@@ -546,7 +568,7 @@ class _HadoopTxFs:
             # the py4j per-entry field accesses (~0.9 ms/file measured)
             # dwarf a local listing; do the whole tree in one pyarrow
             # C++ call and re-prefix the scheme (r18)
-            local = root[len("file:"):]
+            local = _strip_file_scheme(root)
             fast = _pyarrow_walk_local(local, prune_hidden=prune_hidden)
             if fast is not None:
                 for p, size, mtime in fast:

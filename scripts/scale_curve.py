@@ -421,7 +421,7 @@ _SERVING_SCALE_CACHE: dict = {}
 
 def _serving_batch_production(spark, sf_dir):
     """Request-coalescing serving window (ServingReplica.query_batch,
-    256 requests, ONE cascade job) against an IVF-PQ index over the
+    256 requests, one job-free pass) against an IVF-PQ index over the
     SCALED embeddings table; the warm-replica build is cached per
     sf_dir (startup cost, paid outside the timing like bench.py's
     serving entries)."""

@@ -243,6 +243,42 @@ def test_swap_rescues_late_commit(spark, tmp_path, monkeypatch):
         assert not os.path.exists(path + suffix)
 
 
+def test_local_listing_snapshot_retries_a_vanishing_dir(
+    spark, tmp_path, monkeypatch
+):
+    """A local table is listed by one pyarrow walk, never the Hadoop
+    FileSystem, under the same retry as the Hadoop listing: a writer's
+    attempt dir gone before the walk reaches it (pyarrow's own
+    FileNotFoundError) makes the walk start over, not raise."""
+    from pyarrow import fs as pafs
+
+    from rag_vertex_ai_vector_search_spark.sources import txlog
+
+    path, _df = _mk_table(spark, tmp_path)
+    n_files, n_bytes = compactmod.table_file_stats(spark, path)
+    real = txlog._pyarrow_walk_local
+    calls = []
+
+    def racing(root, *, prune_hidden):
+        calls.append(root)
+        if len(calls) == 1:
+            gone = os.path.join(root, "_temporary", "0", "task_0")
+            pafs.LocalFileSystem().get_file_info(
+                pafs.FileSelector(gone, recursive=True)
+            )
+        return real(root, prune_hidden=prune_hidden)
+
+    def no_hadoop_fs(*_a, **_k):
+        raise AssertionError("a local path took the Hadoop listing")
+
+    monkeypatch.setattr(txlog, "_pyarrow_walk_local", racing)
+    monkeypatch.setattr(compactmod, "_fs_and_path", no_hadoop_fs)
+    snap = compactmod._listing_snapshot(spark, path)
+    assert len(calls) == 2
+    assert len(snap) == n_files
+    assert sum(size for _rel, size, _mtime in snap) == n_bytes
+
+
 def test_resume_rescues_late_commit_from_marker(spark, tmp_path):
     """A crash AFTER the renames but BEFORE cleanup leaves the late
     commit stranded in old; the marker carries the pre-swap listing,

@@ -181,3 +181,25 @@ def test_ivf_build_empty_input_raises_clearly(spark):
 
     with _pytest.raises(ValueError, match="empty input"):
         train_pq(empty, m=8, ksub=16, iters=1, sample_rows=100)
+
+
+def test_load_centroids_local_sidecar_is_job_free(spark, tmp_path):
+    """A local ``_centroids`` sidecar reads back with pyarrow: no Spark
+    job, and exactly the matrix ``save_centroids`` wrote, in cluster_id
+    order (for a bare path and its ``file:`` spelling)."""
+    import numpy as np
+
+    from rag_vertex_ai_vector_search_spark.operators.ivf import (
+        load_centroids,
+        save_centroids,
+    )
+
+    cent = np.random.default_rng(5).standard_normal((12, 6))
+    path = str(tmp_path / "index")
+    save_centroids(spark, path, cent)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    got = load_centroids(spark, path)
+    assert sched.nextJobId() == j0
+    assert got.dtype == np.float64 and np.array_equal(got, cent)
+    assert np.array_equal(load_centroids(spark, f"file:{path}"), cent)

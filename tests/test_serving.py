@@ -230,7 +230,7 @@ def test_replica_refresh_sees_appended_vector(spark, sf_smoke, tmp_path):
     )
     rep = ServingReplica.from_source(spark, src, dim=64)
     # centroids came from the sidecar ivf.save wrote
-    assert np.array_equal(rep.ivf.centroids, ivf.centroids)
+    assert np.array_equal(rep.centroids, ivf.centroids)
     q0 = sorted(
         tuple(r) for r in rep.query(
             QUERY_TEXT, doc_id=QUERY_ID, k=5, probe_percent=25.0
@@ -240,7 +240,7 @@ def test_replica_refresh_sees_appended_vector(spark, sf_smoke, tmp_path):
 
     qvec = embed_query_text(QUERY_TEXT, dim=64)
     cid = int(
-        ((qvec.astype(np.float64)[None, :] - rep.ivf.centroids) ** 2)
+        ((qvec.astype(np.float64)[None, :] - rep.centroids) ** 2)
         .sum(axis=1).argmin()
     )
     plant = spark.createDataFrame(
@@ -278,6 +278,51 @@ def test_replica_refresh_sees_appended_vector(spark, sf_smoke, tmp_path):
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert sorted(map(tuple, got)) != q0
+
+
+def test_plain_layout_staleness_without_py4j_listing(
+    spark, tmp_path, monkeypatch
+):
+    """A local plain-parquet layout is fingerprinted by one pyarrow
+    walk (never the Hadoop listing): staleness flips on a data append
+    and on a rewrite of the ``_centroids`` sidecar alone, and clears on
+    refresh."""
+    import pandas as pd
+
+    from rag_vertex_ai_vector_search_spark.operators.ivf import (
+        save_centroids,
+    )
+    from rag_vertex_ai_vector_search_spark.sources import compact
+
+    def no_hadoop_fs(*_a, **_k):
+        raise AssertionError("local fingerprint took the py4j listing")
+
+    monkeypatch.setattr(compact, "_fs_and_path", no_hadoop_fs)
+    path = str(tmp_path / "vectors")
+
+    def append(ids):
+        spark.createDataFrame(
+            pd.DataFrame({"vec_id": ids, "cluster_id": [0] * len(ids)}),
+            "vec_id long, cluster_id int",
+        ).coalesce(1).write.mode("append").partitionBy(
+            "cluster_id"
+        ).parquet(path)
+
+    append([1, 2])
+    save_centroids(spark, path, np.zeros((2, 4)))
+    rep = ServingReplica.from_source(
+        spark, ReplicaSource(vectors_path=path), dim=4
+    )
+    assert not rep.is_stale()
+    append([3])
+    assert rep.is_stale()
+    rep.refresh()
+    assert not rep.is_stale()
+    save_centroids(spark, path, np.ones((2, 4)))
+    assert rep.is_stale()
+    rep.refresh()
+    assert np.array_equal(rep.centroids, np.ones((2, 4)))
+    assert not rep.is_stale()
 
 
 @pytest.mark.full
@@ -405,7 +450,7 @@ def test_replica_refresh_stream_update_and_recluster(
 
     assert rep.is_stale()
     rep.refresh()
-    assert rep.ivf.centroids.shape[0] == new_cent.shape[0]
+    assert rep.centroids.shape[0] == new_cent.shape[0]
     got2 = rep.query(
         QUERY_TEXT, doc_id=QUERY_ID, k=5, probe_percent=50.0
     ).collect()
@@ -540,4 +585,4 @@ def test_compaction_preserves_sidecars_and_replica_refresh(
     assert rep.is_stale()  # the rewrite changed the data-file listing
     report = rep.refresh()
     assert report["n_clusters"] == 8
-    assert np.array_equal(rep.ivf.centroids, ivf.centroids)
+    assert np.array_equal(rep.centroids, ivf.centroids)

@@ -863,7 +863,8 @@ def test_parallel_walk_propagates_errors(tmp_path, monkeypatch):
 def test_pyarrow_walk_matches_scandir_walk(tmp_path, monkeypatch):
     """The pyarrow C++ fast path (r18) must see EXACTLY the scandir
     fallback's file set under both hidden-dir rules -- the fallback is
-    the semantics anchor."""
+    the semantics anchor. Symlinked dirs, inside or outside the tree,
+    are listed by neither (pyarrow follows them unless told not to)."""
     base = str(tmp_path / "t")
     want = []
     for b in range(3):
@@ -874,6 +875,13 @@ def test_pyarrow_walk_matches_scandir_walk(tmp_path, monkeypatch):
             with open(p, "wb") as fh:
                 fh.write(b"x" * (i + 1))
             want.append(p)
+    os.symlink(
+        f"{base}/_bucket=0/cluster_id=7", f"{base}/_bucket=0/cluster_id=8"
+    )
+    os.makedirs(str(tmp_path / "outside"))
+    with open(str(tmp_path / "outside" / "o.parquet"), "wb") as fh:
+        fh.write(b"o")
+    os.symlink(str(tmp_path / "outside"), f"{base}/linked")
     os.makedirs(f"{base}/_txlog")
     with open(f"{base}/_txlog/v0.json", "w") as fh:
         fh.write("{}")

@@ -312,3 +312,20 @@ def test_read_table_any_never_silently_downgrades(spark, tmp_path):
     # a listing read double-counts; the tx-aware read does not
     assert spark.read.parquet(path).count() > 100
     assert read_table_any(spark, path).count() == 100
+
+
+def test_file_uri_spellings_walk_the_same_files(spark, tmp_path):
+    """``file:/x`` and ``file:///x`` list the same files through the
+    pyarrow fast path; ``file://host/x`` names no local path and fails
+    loudly instead of listing nothing (an adopt over an empty listing
+    would commit an empty manifest)."""
+    root = str(tmp_path / "t")
+    os.makedirs(f"{root}/cluster_id=1")
+    with open(f"{root}/cluster_id=1/f.parquet", "wb") as fh:
+        fh.write(b"x")
+    for uri in (f"file:{root}", f"file://{root}"):
+        got = [p for p, *_ in tx._fs_for(spark, uri).walk_files(uri)]
+        assert got == [f"file:{root}/cluster_id=1/f.parquet"]
+    bad = f"file://host{root}"
+    with pytest.raises(ValueError, match="authority"):
+        list(tx._fs_for(spark, bad).walk_files(bad))
