@@ -120,45 +120,27 @@ def ingest_documents(
     ``embed_client.model_embedding_udf`` in. Prior models' vectors
     stay in their own dirs for rollback; vacuum them per-dir.
     """
-    if surrogate_key not in ("sha2", "uuid"):
-        raise ValueError(
-            f"surrogate_key must be 'sha2' or 'uuid', got {surrogate_key!r}"
-        )
     embed = hash_embedding_udf(dim)
-    counter = token_counter if token_counter is not None else token_count
-
-    with_stats = docs.withColumn("token_count", counter(text_col))
-
+    with_stats, base, point_cols = datapoint_sql(
+        docs,
+        id_source_col=id_source_col,
+        text_col=text_col,
+        dim=dim,
+        max_tokens=max_tokens,
+        file_type=file_type,
+        content_type=content_type,
+        extra_restrict_cols=extra_restrict_cols,
+        crowding_col=crowding_col,
+        token_counter=token_counter,
+        surrogate_key=surrogate_key,
+        spread=True,
+    )
     rejected = with_stats.filter(F.col("token_count") > max_tokens)
     if fail_fast and not rejected.isEmpty():
         bad = rejected.select(id_source_col, "token_count").first()
         raise TokenLimitExceeded(
             f"document {bad[0]} has {bad[1]} tokens > {max_tokens}"
         )
-    accepted = with_stats.filter(F.col("token_count") <= max_tokens)
-
-    # One input file = one partition; spread the embedding UDF (the
-    # expensive stage -- a model call in production) across all cores.
-    from ..sources.tables import fan_out
-
-    accepted = fan_out(accepted)
-
-    key_expr = (
-        F.expr("uuid()")
-        if surrogate_key == "uuid"
-        else F.sha2(
-            F.concat_ws("||", F.col(id_source_col).cast("string")), 256
-        )
-    )
-    base = accepted.select(
-        key_expr.alias("data_point_id"),
-        F.col(id_source_col),
-        F.col(text_col).alias("content"),
-        F.col("token_count"),
-        F.length(text_col).alias("content_length"),
-        *[F.col(c) for c in extra_restrict_cols],
-        *( [F.col(crowding_col).alias("_crowd")] if crowding_col else [] ),
-    )
     if embed_distinct or embed_cache_path is not None:
         # embed once per distinct content, join vectors back: the UDF
         # runs above the distinct aggregate, so duplicate texts never
@@ -190,29 +172,7 @@ def ingest_documents(
     else:
         base = base.withColumn("feature_vector", embed(F.col("content")))
 
-    restricts = F.create_map(
-        F.lit("file_type"), F.array(F.lit(file_type)),
-        F.lit("content_type"), F.array(F.lit(content_type)),
-        *[
-            x
-            for c in extra_restrict_cols
-            for x in (F.lit(c), F.array(F.col(c).cast("string")))
-        ],
-    )
-    numeric_restricts = F.create_map(
-        F.lit("embedding_dimension"), F.lit(dim).cast("bigint"),
-        F.lit("content_length"), F.col("content_length").cast("bigint"),
-        F.lit("token_count"), F.col("token_count").cast("bigint"),
-    )
-
-    datapoints = base.select(
-        "data_point_id",
-        "feature_vector",
-        restricts.alias("restricts"),
-        numeric_restricts.alias("numeric_restricts"),
-        (F.col("_crowd") if crowding_col else F.col(id_source_col).cast("string"))
-        .alias("crowding_attribute"),
-    )
+    datapoints = base.select("data_point_id", "feature_vector", *point_cols)
 
     metadata = base.select(
         "data_point_id",
@@ -234,6 +194,88 @@ def ingest_documents(
         rejected=rejected,
         total_tokens_expr=F.sum("token_count"),
     )
+
+
+def datapoint_sql(
+    docs: DataFrame,
+    *,
+    id_source_col: str = "doc_id",
+    text_col: str = "text",
+    dim: int = DEFAULT_DIM,
+    max_tokens: int = MAX_TOKENS_PER_TEXT,
+    file_type: str = "markdown",
+    content_type: str = "documentation",
+    extra_restrict_cols: tuple[str, ...] = (),
+    crowding_col: str | None = None,
+    token_counter=None,
+    surrogate_key: str = "sha2",
+    spread: bool = False,
+) -> tuple[DataFrame, DataFrame, list[Column]]:
+    """The SQL half of ``ingest_documents``: everything but the
+    embedding, with the same options. Returns ``(with_stats, base,
+    point_cols)``: the documents with their ``token_count``; the
+    accepted rows keyed (``data_point_id``, the id column,
+    ``content``, ``token_count``, ``content_length``, the restrict
+    columns and ``_crowd``); and the ``restricts``,
+    ``numeric_restricts`` and ``crowding_attribute`` columns over
+    ``base``. ``spread`` fans the accepted rows out across the cores
+    before the key, for the embedding stage that follows in
+    ``ingest_documents``. No Python runs in this half, so a caller
+    that embeds on the driver collects it in one job."""
+    if surrogate_key not in ("sha2", "uuid"):
+        raise ValueError(
+            f"surrogate_key must be 'sha2' or 'uuid', got {surrogate_key!r}"
+        )
+    counter = token_counter if token_counter is not None else token_count
+    with_stats = docs.withColumn("token_count", counter(text_col))
+    accepted = with_stats.filter(F.col("token_count") <= max_tokens)
+    if spread:
+        # One input file = one partition; spread the embedding UDF (the
+        # expensive stage -- a model call in production) across all
+        # cores.
+        from ..sources.tables import fan_out
+
+        accepted = fan_out(accepted)
+
+    key_expr = (
+        F.expr("uuid()")
+        if surrogate_key == "uuid"
+        else F.sha2(
+            F.concat_ws("||", F.col(id_source_col).cast("string")), 256
+        )
+    )
+    base = accepted.select(
+        key_expr.alias("data_point_id"),
+        F.col(id_source_col),
+        F.col(text_col).alias("content"),
+        F.col("token_count"),
+        F.length(text_col).alias("content_length"),
+        *[F.col(c) for c in extra_restrict_cols],
+        *( [F.col(crowding_col).alias("_crowd")] if crowding_col else [] ),
+    )
+    restricts = F.create_map(
+        F.lit("file_type"), F.array(F.lit(file_type)),
+        F.lit("content_type"), F.array(F.lit(content_type)),
+        *[
+            x
+            for c in extra_restrict_cols
+            for x in (F.lit(c), F.array(F.col(c).cast("string")))
+        ],
+    )
+    numeric_restricts = F.create_map(
+        F.lit("embedding_dimension"), F.lit(dim).cast("bigint"),
+        F.lit("content_length"), F.col("content_length").cast("bigint"),
+        F.lit("token_count"), F.col("token_count").cast("bigint"),
+    )
+    crowding = (
+        F.col("_crowd") if crowding_col
+        else F.col(id_source_col).cast("string")
+    )
+    return with_stats, base, [
+        restricts.alias("restricts"),
+        numeric_restricts.alias("numeric_restricts"),
+        crowding.alias("crowding_attribute"),
+    ]
 
 
 def _model_cache_dir(cache_path: str, model_id: str) -> str:

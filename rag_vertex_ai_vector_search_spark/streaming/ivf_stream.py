@@ -5,15 +5,29 @@ upsert at setup_vector_search.py:147-153) AND leaf-partitioned tree-AH
 (common/config.py:36-38). This module keeps the two properties together
 under continuous ingest, the way tree-AH stream update actually works:
 
-- **New vectors** are assigned to the nearest EXISTING centroid per
-  micro-batch (a pandas UDF holding only the tiny centroid matrix —
-  no retraining in the hot path).
+- **One merge kernel.** ``merge_keys`` is an epoch's bucket surgery as
+  one Arrow function over the base and update rows of any set of whole
+  keys: keep each key's latest update row (the last in arrival order),
+  embed it, keep a key already in the index in its stored
+  ``cluster_id``, give a new key its nearest EXISTING centroid (no
+  retraining in the hot path), return the merged rows.
 - **Updated vectors keep their original leaf** (sticky assignment):
   moving a key between cluster partitions under copy-on-write would
   require rewriting and tombstoning partitions the batch didn't write,
   so reassignment is deferred to the periodic re-cluster — the tree-AH
   rebalance analog. The cost is bounded, measurable recall drift, not
   correctness (search still finds the row via its stored vector).
+- **Two executors, one kernel.** A tx epoch of a local (scheme-less or
+  ``file:``) index whose micro-batch and touched buckets are under
+  ``DRIVER_EPOCH_BUDGET_BYTES`` of files runs on the driver: one Arrow
+  collect of ``ingest_documents``' SQL half, the kernel in process,
+  one parquet file per touched ``(_bucket, cluster_id)`` written with
+  pyarrow, one commit -- one Spark job per epoch. Every other epoch
+  (over the budget, a remote index, the legacy ``txlog=False`` layout)
+  runs the same kernel in ``mapInArrow`` tasks over the rows
+  repartitioned and sorted by key, so a task holds a few keys at a
+  time, never a whole bucket. Both write the same rows and the same
+  file schema.
 - **Drift is observable, not silent**: ``cluster_drift_report`` scans
   the index once and reports, per leaf, the row count and the fraction
   of rows whose nearest centroid is no longer their assigned leaf;
@@ -30,32 +44,231 @@ never leave their (bucket, cluster) directory.
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.ingest import ingest_documents
+from ..functions.hashing import hash_embedding_numpy, make_embed_batch
+from ..operators.ingest import datapoint_sql
 from .ingest import DEFAULT_MERGE_BUCKETS, _bucket_expr, _is_path_not_found
+
+# A tx epoch runs on the driver when its micro-batch's file bytes (the
+# optimizer's estimate) plus the live bytes of the buckets it touches
+# (from the manifest) are under this; both are known without a job.
+DRIVER_EPOCH_BUDGET_BYTES = 64 * 1024 * 1024
+
+
+def nearest_leaf(vecs: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+    """Row of ``centroids`` nearest each row of ``vecs`` (euclidean, the
+    KMeans assignment geometry), from the expanded squared distance."""
+    d2 = (
+        (vecs ** 2).sum(axis=1, keepdims=True)
+        - 2.0 * vecs @ centroids.T
+        + (centroids ** 2).sum(axis=1)
+    )
+    return d2.argmin(axis=1)
 
 
 def nearest_cluster_udf(centroids: np.ndarray):
-    """pandas_udf: vector -> id of its nearest centroid (euclidean, the
-    KMeans assignment geometry). Runs on executors; the centroid matrix
-    ships in the closure (n_clusters x dim doubles — tiny)."""
+    """pandas_udf: vector -> id of its nearest centroid. Runs on
+    executors; the centroid matrix ships in the closure (n_clusters x
+    dim doubles — tiny)."""
 
     def _assign(vecs: pd.Series) -> pd.Series:
         vmat = np.asarray(list(vecs), dtype=np.float64)
-        d2 = (
-            (vmat ** 2).sum(axis=1, keepdims=True)
-            - 2.0 * vmat @ centroids.T
-            + (centroids ** 2).sum(axis=1)
-        )
-        return pd.Series(d2.argmin(axis=1).astype(np.int32))
+        return pd.Series(nearest_leaf(vmat, centroids).astype(np.int32))
 
     return F.pandas_udf(_assign, T.IntegerType())
+
+
+def merge_keys(
+    base: pa.Table, updates: pa.Table, centroids: np.ndarray, dim: int
+) -> pa.Table:
+    """The merge kernel: the index rows of any set of whole keys after
+    one epoch. ``base`` holds their stored rows (index columns, in
+    index order); ``updates`` their update rows in arrival order (the
+    SQL half of ``ingest_documents`` plus ``_bucket``, with
+    ``content`` in place of the vector). Each key's last update row
+    wins and is embedded with the function the ingest UDF wraps; a key
+    already in ``base`` keeps its stored ``cluster_id``, a new key
+    takes its nearest centroid. Returns the merged rows in ``base``'s
+    schema: untouched base rows first, then the winners."""
+    dup = pd.Series(
+        updates["data_point_id"].to_numpy(zero_copy_only=False)
+    ).duplicated(keep="last").to_numpy()
+    latest = updates.filter(pa.array(~dup))
+    embed = make_embed_batch(lambda t: hash_embedding_numpy(t, dim))
+    vecs = np.asarray(
+        embed(latest["content"].to_pylist()), dtype=np.float32
+    ).reshape(latest.num_rows, dim)
+    stored = base["cluster_id"].take(
+        pc.index_in(latest["data_point_id"], value_set=base["data_point_id"])
+    )
+    nearest = pa.array(
+        nearest_leaf(vecs.astype(np.float64), centroids), pa.int32()
+    )
+    fv_type = base.schema.field("feature_vector").type
+    winners = pa.table({
+        "data_point_id": latest["data_point_id"],
+        "feature_vector": pa.ListArray.from_arrays(
+            pa.array(np.arange(0, vecs.size + 1, dim, dtype=np.int32)),
+            pa.array(vecs.ravel()),
+            type=fv_type,
+        ),
+        "restricts": latest["restricts"],
+        "numeric_restricts": latest["numeric_restricts"],
+        "crowding_attribute": latest["crowding_attribute"],
+        "_bucket": latest["_bucket"],
+        "cluster_id": pc.coalesce(stored, nearest),
+    }).cast(base.schema)
+    kept = base.filter(
+        pc.invert(pc.is_in(base["data_point_id"], value_set=latest["data_point_id"]))
+    )
+    return pa.concat_tables([kept, winners])
+
+
+def _index_schema(updates: T.StructType) -> T.StructType:
+    """The index rows' Spark schema, from the updates' (the SQL half
+    plus ``_bucket``): the ingest UDF's vector in place of
+    ``content``, then the partition columns."""
+    by = {f.name: f for f in updates.fields}
+    return T.StructType([
+        by["data_point_id"],
+        T.StructField("feature_vector", T.ArrayType(T.FloatType()), True),
+        by["restricts"],
+        by["numeric_restricts"],
+        by["crowding_attribute"],
+        by["_bucket"],
+        T.StructField("cluster_id", T.IntegerType(), True),
+    ])
+
+
+def _spark_merge(
+    base: DataFrame | None, updates: DataFrame, centroids: np.ndarray,
+    dim: int,
+) -> DataFrame:
+    """The Spark executor of ``merge_keys``: update rows numbered in
+    arrival order, unioned with the base rows, repartitioned and sorted
+    by key; each task feeds the kernel runs of whole keys, batch by
+    batch, carrying the last key of a batch into the next."""
+    schema = _index_schema(updates.schema)
+    arrow = to_arrow_schema(schema)
+    cols = updates.columns
+    has_base = base is not None
+
+    def _kernel(rows: pa.Table) -> pa.Table:
+        is_update = pc.is_valid(rows["_seq"])
+        upd = rows.filter(is_update)
+        upd = upd.take(pc.sort_indices(upd["_seq"])).select(cols)
+        old = (
+            rows.filter(pc.invert(is_update)).select(arrow.names).cast(arrow)
+            if has_base else arrow.empty_table()
+        )
+        return merge_keys(old, upd, centroids, dim)
+
+    def _partition(batches):
+        carry = None
+        for batch in batches:
+            rows = pa.Table.from_batches([batch])
+            if carry is not None:
+                rows = pa.concat_tables([carry, rows])
+            if not rows.num_rows:
+                continue
+            cut = pc.index(rows["data_point_id"], rows["data_point_id"][-1]).as_py()
+            if cut:
+                yield from _kernel(rows.slice(0, cut)).to_batches()
+            carry = rows.slice(cut)
+        if carry is not None and carry.num_rows:
+            yield from _kernel(carry).to_batches()
+
+    rows = updates.withColumn("_seq", F.monotonically_increasing_id())
+    if base is not None:
+        rows = base.unionByName(rows, allowMissingColumns=True)
+    par = updates.sparkSession.sparkContext.defaultParallelism
+    return (
+        rows.repartition(par, "data_point_id")
+        .sortWithinPartitions("data_point_id")
+        .mapInArrow(_partition, schema)
+    )
+
+
+def _driver_merge(
+    log, rows: pa.Table, inputs: list[dict], schema: T.StructType,
+    centroids: np.ndarray, dim: int,
+) -> list[dict]:
+    """The driver executor of ``merge_keys``: read the touched files
+    with pyarrow, merge, and write one file per ``(_bucket,
+    cluster_id)`` straight into its final dir under a commit-unique
+    ``tx-<uuid>-`` name -- invisible to snapshot readers until the
+    caller commits them, and deleted here if a write fails. The files
+    carry the schema Spark writes (no dictionary on the id and vector
+    columns, no Arrow schema blob). Returns their manifest entries."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from ..sources.txlog import _delete_files, _strip_file_scheme
+
+    parts = ("_bucket", "cluster_id")
+    arrow = to_arrow_schema(schema)
+    root = _strip_file_scheme(log.table)
+    base = ds.dataset(
+        [f"{root}/{f['path']}" for f in inputs], format="parquet",
+        schema=arrow,
+        partitioning=ds.partitioning(
+            pa.schema([arrow.field(c) for c in parts]), flavor="hive"
+        ),
+        partition_base_dir=root,
+    ).to_table() if inputs else arrow.empty_table()
+    merged = merge_keys(base, rows, centroids, dim)
+    merged = merged.take(pc.sort_indices(
+        merged, sort_keys=[(c, "ascending") for c in parts]
+    ))
+    pairs = np.column_stack(
+        [merged[c].to_numpy() for c in parts]
+    ).astype(np.int64)
+    starts = np.flatnonzero(
+        np.r_[True, (pairs[1:] != pairs[:-1]).any(axis=1)]
+    )
+    ends = np.r_[starts[1:], len(pairs)]
+    data = merged.drop_columns(list(parts))
+    u = uuid.uuid4().hex[:12]
+    written: list[dict] = []
+    try:
+        for i, (lo, hi) in enumerate(zip(starts, ends)):
+            b, c = pairs[lo]
+            rel = (
+                f"_bucket={b}/cluster_id={c}/"
+                f"tx-{u}-part-{i:05d}.snappy.parquet"
+            )
+            written.append({"path": rel, "size": 0})
+            path = f"{root}/{rel}"
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            pq.write_table(
+                data.slice(lo, hi - lo), path, store_schema=False,
+                # the low-cardinality leaves Spark's writer
+                # dictionary-encodes; ids, vectors and the crowding tag
+                # are near-unique and stay plain
+                use_dictionary=[
+                    "restricts.key_value.key",
+                    "restricts.key_value.value.list.element",
+                    "numeric_restricts.key_value.key",
+                    "numeric_restricts.key_value.value",
+                ],
+            )
+            written[-1]["size"] = os.path.getsize(path)
+    except BaseException:
+        _delete_files(log.table, written, log.spark)
+        raise
+    return written
 
 
 def stream_merge_into_ivf_index(
@@ -74,9 +287,11 @@ def stream_merge_into_ivf_index(
     """Streaming upsert that maintains the clustered IVF layout.
 
     Same exactly-once contract as stream_merge_into_index (checkpoint +
-    keyed idempotent merge); each batch additionally assigns new keys a
-    ``cluster_id`` from ``centroids`` and preserves existing keys'
-    assignments (sticky — see module docstring).
+    keyed idempotent merge); each batch merges through ``merge_keys``:
+    the last row of a key in the batch wins, new keys take a
+    ``cluster_id`` from ``centroids`` and existing keys keep theirs
+    (sticky — see module docstring). Documents over the ingest token
+    gate are dropped.
 
     ``txlog=True`` (r15): each epoch's bucket surgery commits through
     the transactional log -- the touched buckets' live files are
@@ -86,31 +301,41 @@ def stream_merge_into_ivf_index(
     raises, Structured Streaming retries the epoch, and the
     (checkpoint_dir, epoch_id) txn meta makes the retry exactly-once.
     Readers of a tx index must use ``sources.txlog.read_table_any``.
+    A tx epoch of a local index under ``DRIVER_EPOCH_BUDGET_BYTES``
+    (micro-batch file bytes plus the touched buckets' live bytes) runs
+    on the driver in one collect and launches one job; any other
+    epoch, and every ``txlog=False`` epoch, runs the kernel on Spark.
+
+    Without ``trigger_seconds`` the query triggers as fast as it can,
+    so an idle source is re-listed with no pause between polls. Drain
+    a finite source with ``processAllAvailable()`` then ``stop()``, or
+    give a long-lived stream a trigger interval.
     """
-    assign = nearest_cluster_udf(centroids)
 
     def _merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # the tx branch needs no emptiness probe: its touched-bucket
-        # collect comes back empty for an empty epoch
+        # set comes back empty for an empty epoch
         if not txlog and batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        result = ingest_documents(
-            batch_df, id_source_col=id_source_col, text_col=text_col, dim=dim
+        _, keyed, point_cols = datapoint_sql(
+            batch_df, id_source_col=id_source_col, text_col=text_col,
+            dim=dim,
         )
-        updates = result.datapoints.withColumn(
+        updates = keyed.select("data_point_id", "content", *point_cols).withColumn(
             "_bucket", _bucket_expr("data_point_id", n_buckets)
-        ).withColumn("cluster_id", assign(F.col("feature_vector")))
-
+        )
         if txlog:
-            _tx_merge_sticky_batch(
-                spark, index_path, updates,
+            _tx_merge_batch(
+                batch_df, updates, index_path, centroids, dim=dim,
                 meta={
                     "txn_app": checkpoint_dir,
                     "txn_batch": int(epoch_id),
                 },
             )
             return
+        spark = batch_df.sparkSession
+        par = spark.sparkContext.defaultParallelism
+        parts = ("_bucket", "cluster_id")
         try:
             base = spark.read.parquet(index_path)
         except AnalysisException as e:
@@ -121,27 +346,24 @@ def stream_merge_into_ivf_index(
             # writing into bucket x leaf dirs otherwise leaves up to N
             # one-row files per dir, and every later epoch/read pays
             # the listing.
-            updates.repartition(
-                spark.sparkContext.defaultParallelism,
-                "_bucket", "cluster_id",
+            _spark_merge(None, updates, centroids, dim).repartition(
+                par, *parts
             ).write.mode(
                 "errorifexists"
-            ).partitionBy("_bucket", "cluster_id").parquet(index_path)
+            ).partitionBy(*parts).parquet(index_path)
             return
 
         touched = sorted(
             r[0] for r in updates.select("_bucket").distinct().collect()
         )
         base_touched = base.filter(F.col("_bucket").isin(touched))
-        merged = _sticky_merge(base_touched, updates)
-        merged.repartition(
-            spark.sparkContext.defaultParallelism,
-            "_bucket", "cluster_id",
+        _spark_merge(base_touched, updates, centroids, dim).repartition(
+            par, *parts
         ).localCheckpoint(
             eager=True
         ).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_bucket", "cluster_id").parquet(index_path)
+        ).partitionBy(*parts).parquet(index_path)
 
     writer = stream_df.writeStream.foreachBatch(_merge_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -151,84 +373,82 @@ def stream_merge_into_ivf_index(
     return writer.start()
 
 
-def _sticky_merge(base_touched: DataFrame, updates: DataFrame) -> DataFrame:
-    """Keyed keep-latest merge where a key already in the index keeps
-    its leaf even if its vector changed (no cross-partition moves
-    under copy-on-write); new keys take the nearest-centroid id. One
-    window does both: ordered update-first, its first row is the
-    winning row and its last row is the base row (the prior leaf)
-    whenever the key was already indexed."""
-    key = "data_point_id"
-    w = Window.partitionBy(key).orderBy(F.col("_src").desc())
-    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        base_touched.withColumn("_src", F.lit(0))
-        .unionByName(updates.withColumn("_src", F.lit(1)))
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("cluster_id", F.last("cluster_id").over(whole))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
-
-
-def _tx_merge_sticky_batch(
-    spark, index_path: str, updates: DataFrame, *, meta: dict
+def _tx_merge_batch(
+    batch_df: DataFrame, updates: DataFrame, index_path: str,
+    centroids: np.ndarray, *, dim: int, meta: dict,
 ) -> int | None:
-    """One epoch's sticky IVF merge committed through the commit log:
-    read the snapshot's touched-bucket files, sticky-merge, stage the
-    replacement partitioned (_bucket, cluster_id), publish. The replay
-    guard makes a retried epoch a no-op; a conflicting concurrent
-    rewrite raises and lets the streaming engine retry the epoch on
-    the fresh snapshot. An empty epoch touches no bucket and returns
-    None before any log or version is created.
+    """One epoch's IVF merge committed through the commit log: pick
+    the executor, merge the touched buckets' live files with the
+    updates, publish the replacement. The replay guard makes a retried
+    epoch a no-op; a conflicting concurrent rewrite raises and lets the
+    streaming engine retry the epoch on the fresh snapshot. An empty
+    epoch touches no bucket and returns None before any log or version
+    is created.
 
-    The staged write reads the base files directly, with no checkpoint
-    in between: they are immutable, and the commit only un-lists
-    them."""
+    The Spark executor reads the base files directly, with no
+    checkpoint in between: they are immutable, and the commit only
+    un-lists them."""
+    from ..operators.serving import _plan_bytes
     from ..sources.txlog import (
         TxIdempotentReplay,
         TxLog,
         _delete_files,
+        _scheme_of,
         _stage_and_move_in,
         read_files,
     )
 
+    spark = batch_df.sparkSession
     log = TxLog(spark, index_path)
     if log.exists():
         done = log.find_txn(meta["txn_app"], meta["txn_batch"])
         if done is not None:
             return done
-    touched = {
-        f"_bucket={r[0]}"
-        for r in updates.select("_bucket").distinct().collect()
-    }
+    batch_bytes = _plan_bytes(batch_df)
+    rows = (
+        updates.toArrow()
+        if batch_bytes < DRIVER_EPOCH_BUDGET_BYTES
+        and _scheme_of(index_path) in (None, "file")
+        and log.schema_at() is None
+        else None
+    )
+    buckets = (
+        pc.unique(rows["_bucket"]).to_pylist() if rows is not None
+        else [r[0] for r in updates.select("_bucket").distinct().collect()]
+    )
+    touched = {f"_bucket={b}" for b in buckets}
     if not touched:
         return None
     v = log.ensure()
-    live = log.live_files(v)
-    inputs = [r for r in live if r.split("/", 1)[0] in touched]
-    # the base files were written from epochs of this same shape, so
-    # the updates' schema reads them without a footer-inference job
-    merged = (
-        _sticky_merge(
-            read_files(
-                spark, log, inputs, log.schema_at(v) or updates.schema
-            ),
-            updates,
-        )
-        if inputs else updates
-    )
+    live = log.snapshot(v)["files"]
+    inputs = [f for f in live if f["path"].split("/", 1)[0] in touched]
+    schema = _index_schema(updates.schema)
     parts = ("_bucket", "cluster_id")
-    new = _stage_and_move_in(
-        spark,
-        index_path,
-        merged.repartition(spark.sparkContext.defaultParallelism, *parts),
-        partition_cols=parts,
-    )
+    if rows is not None and batch_bytes + sum(
+        int(f["size"]) for f in inputs
+    ) < DRIVER_EPOCH_BUDGET_BYTES:
+        new = _driver_merge(log, rows, inputs, schema, centroids, dim)
+    else:
+        # the base files were written from epochs of this same shape, so
+        # the index schema reads them without a footer-inference job
+        base = read_files(
+            spark, log, [f["path"] for f in inputs],
+            log.schema_at(v) or schema,
+        ) if inputs else None
+        new = _stage_and_move_in(
+            spark,
+            index_path,
+            _spark_merge(base, updates, centroids, dim).repartition(
+                spark.sparkContext.defaultParallelism, *parts
+            ),
+            partition_cols=parts,
+        )
     try:
         if not live:
             return log.append_files(new, action="merge-init", meta=meta)
-        return log.replace_files(inputs, new, action="merge", meta=meta)
+        return log.replace_files(
+            [f["path"] for f in inputs], new, action="merge", meta=meta
+        )
     except TxIdempotentReplay as r:
         # a concurrent replay of this epoch won: reap our staged files
         # and report the winner's version (r17)
@@ -507,13 +727,7 @@ def recluster_ivf_index(
         for leaf in np.unique(cid_arr):
             ids, sub = sub_map[int(leaf)]
             mask = cid_arr == leaf
-            vm = vmat[mask]
-            d2 = (
-                (vm ** 2).sum(axis=1, keepdims=True)
-                - 2.0 * vm @ sub.T
-                + (sub ** 2).sum(axis=1)
-            )
-            out[mask] = ids[d2.argmin(axis=1)].astype(np.int32)
+            out[mask] = ids[nearest_leaf(vmat[mask], sub)].astype(np.int32)
         return pd.Series(out)
 
     reassign_udf = F.pandas_udf(_reassign, T.IntegerType())

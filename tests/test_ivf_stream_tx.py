@@ -2,7 +2,9 @@
 epochs of new and rewritten keys, a replayed epoch and an empty epoch
 against a tiny file source. Checks the key set and latest vectors,
 sticky leaves for rewritten keys, replay and empty-epoch no-ops through
-the commit log, and the job count of one drained epoch."""
+the commit log, and the job count of one drained epoch -- on the
+driver executor (the default budget) and on the Spark executor (the
+budget forced to 0)."""
 
 import os
 
@@ -18,6 +20,7 @@ from rag_vertex_ai_vector_search_spark.sources.txlog import (
     TxLog,
     read_table,
 )
+from rag_vertex_ai_vector_search_spark.streaming import ivf_stream
 from rag_vertex_ai_vector_search_spark.streaming.ivf_stream import (
     stream_merge_into_ivf_index,
 )
@@ -39,6 +42,17 @@ def _nearest(text: str, centroids: np.ndarray) -> int:
 
 
 def test_tx_stream_merge_epochs_replay_and_empty(spark, tmp_path):
+    # a driver epoch launches its one collect
+    _epochs_replay_and_empty(spark, tmp_path, max_jobs=2)
+
+
+def test_tx_stream_merge_on_the_spark_executor(spark, tmp_path, monkeypatch):
+    # stream start-up plus the Spark merge's jobs
+    monkeypatch.setattr(ivf_stream, "DRIVER_EPOCH_BUDGET_BYTES", 0)
+    _epochs_replay_and_empty(spark, tmp_path, max_jobs=8)
+
+
+def _epochs_replay_and_empty(spark, tmp_path, *, max_jobs: int) -> None:
     src = str(tmp_path / "src")
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
@@ -72,8 +86,7 @@ def test_tx_stream_merge_epochs_replay_and_empty(spark, tmp_path):
     epoch_jobs = jsc.dagScheduler().nextJobId() - j0
     v1 = log.current_version()
     assert v1 == v0 + 1
-    # one drained epoch: stream start-up plus the merge itself
-    assert epoch_jobs <= 8, epoch_jobs
+    assert epoch_jobs <= max_jobs, epoch_jobs
 
     latest = dict(first)
     latest.update(dict(second))
