@@ -6,11 +6,16 @@ upsert at setup_vector_search.py:147-153) AND leaf-partitioned tree-AH
 under continuous ingest, the way tree-AH stream update actually works:
 
 - **One merge kernel.** ``merge_keys`` is an epoch's bucket surgery as
-  one Arrow function over the base and update rows of any set of whole
-  keys: keep each key's latest update row (the last in arrival order),
-  embed it, keep a key already in the index in its stored
-  ``cluster_id``, give a new key its nearest EXISTING centroid (no
-  retraining in the hot path), return the merged rows.
+  one Arrow function over the update rows of any set of whole keys and
+  the stored ``cluster_id``s of those already indexed: keep each key's
+  latest update row (the last in the micro-batch's scan order -- when
+  one micro-batch drains several files, Spark's file scan reads them
+  largest first, so two rewrites of one key in one micro-batch are
+  not ordered by file age), embed it, keep a key
+  already in the index in its stored ``cluster_id``, give a new key its
+  nearest EXISTING centroid (no retraining in the hot path), return
+  the winners. Base rows of keys the epoch does not rewrite are copied
+  as they are.
 - **Updated vectors keep their original leaf** (sticky assignment):
   moving a key between cluster partitions under copy-on-write would
   require rewriting and tombstoning partitions the batch didn't write,
@@ -18,16 +23,18 @@ under continuous ingest, the way tree-AH stream update actually works:
   rebalance analog. The cost is bounded, measurable recall drift, not
   correctness (search still finds the row via its stored vector).
 - **Two executors, one kernel.** A tx epoch of a local (scheme-less or
-  ``file:``) index whose micro-batch and touched buckets are under
-  ``DRIVER_EPOCH_BUDGET_BYTES`` of files runs on the driver: one Arrow
-  collect of ``ingest_documents``' SQL half, the kernel in process,
+  ``file:``) index whose micro-batch file bytes plus the index's live
+  bytes (from the manifest) are under ``DRIVER_EPOCH_BUDGET_BYTES``
+  runs on the driver: one Arrow collect of ``ingest_documents``' SQL
+  half, the touched files read with pyarrow, the kernel in process,
   one parquet file per touched ``(_bucket, cluster_id)`` written with
   pyarrow, one commit -- one Spark job per epoch. Every other epoch
   (over the budget, a remote index, the legacy ``txlog=False`` layout)
-  runs the same kernel in ``mapInArrow`` tasks over the rows
-  repartitioned and sorted by key, so a task holds a few keys at a
-  time, never a whole bucket. Both write the same rows and the same
-  file schema.
+  runs the same kernel in ``mapInArrow`` tasks over the update rows
+  only, joined by key to the stored leaves and repartitioned and
+  sorted by key, so a task holds a few keys at a time, never a whole
+  bucket; the untouched keys' base rows stay in the JVM. Both write
+  the same rows and the same file schema.
 - **Drift is observable, not silent**: ``cluster_drift_report`` scans
   the index once and reports, per leaf, the row count and the fraction
   of rows whose nearest centroid is no longer their assigned leaf;
@@ -62,8 +69,8 @@ from ..operators.ingest import datapoint_sql
 from .ingest import DEFAULT_MERGE_BUCKETS, _bucket_expr, _is_path_not_found
 
 # A tx epoch runs on the driver when its micro-batch's file bytes (the
-# optimizer's estimate) plus the live bytes of the buckets it touches
-# (from the manifest) are under this; both are known without a job.
+# optimizer's estimate) plus the index's live bytes (from the manifest)
+# are under this; both are known without a job.
 DRIVER_EPOCH_BUDGET_BYTES = 64 * 1024 * 1024
 
 
@@ -91,17 +98,19 @@ def nearest_cluster_udf(centroids: np.ndarray):
 
 
 def merge_keys(
-    base: pa.Table, updates: pa.Table, centroids: np.ndarray, dim: int
+    updates: pa.Table, stored: pa.Table, centroids: np.ndarray, dim: int,
+    schema: pa.Schema,
 ) -> pa.Table:
-    """The merge kernel: the index rows of any set of whole keys after
-    one epoch. ``base`` holds their stored rows (index columns, in
-    index order); ``updates`` their update rows in arrival order (the
-    SQL half of ``ingest_documents`` plus ``_bucket``, with
-    ``content`` in place of the vector). Each key's last update row
-    wins and is embedded with the function the ingest UDF wraps; a key
-    already in ``base`` keeps its stored ``cluster_id``, a new key
-    takes its nearest centroid. Returns the merged rows in ``base``'s
-    schema: untouched base rows first, then the winners."""
+    """The merge kernel: the index row each key of ``updates`` has after
+    one epoch. ``updates`` holds the update rows of whole keys in the
+    micro-batch's scan order (the SQL half of ``ingest_documents`` plus
+    ``_bucket``, with ``content`` in place of the vector); ``stored``
+    maps the keys already in the index to their ``cluster_id``
+    (``data_point_id``, ``cluster_id``; other keys and null ids may
+    appear). Each key's last update row wins and is embedded with the
+    function the ingest UDF wraps; a key in ``stored`` keeps its
+    ``cluster_id``, a new key takes its nearest centroid. Returns the
+    winners in the index ``schema``."""
     dup = pd.Series(
         updates["data_point_id"].to_numpy(zero_copy_only=False)
     ).duplicated(keep="last").to_numpy()
@@ -110,30 +119,25 @@ def merge_keys(
     vecs = np.asarray(
         embed(latest["content"].to_pylist()), dtype=np.float32
     ).reshape(latest.num_rows, dim)
-    stored = base["cluster_id"].take(
-        pc.index_in(latest["data_point_id"], value_set=base["data_point_id"])
+    kept = stored["cluster_id"].take(
+        pc.index_in(latest["data_point_id"], value_set=stored["data_point_id"])
     )
     nearest = pa.array(
         nearest_leaf(vecs.astype(np.float64), centroids), pa.int32()
     )
-    fv_type = base.schema.field("feature_vector").type
-    winners = pa.table({
+    return pa.table({
         "data_point_id": latest["data_point_id"],
         "feature_vector": pa.ListArray.from_arrays(
             pa.array(np.arange(0, vecs.size + 1, dim, dtype=np.int32)),
             pa.array(vecs.ravel()),
-            type=fv_type,
+            type=schema.field("feature_vector").type,
         ),
         "restricts": latest["restricts"],
         "numeric_restricts": latest["numeric_restricts"],
         "crowding_attribute": latest["crowding_attribute"],
         "_bucket": latest["_bucket"],
-        "cluster_id": pc.coalesce(stored, nearest),
-    }).cast(base.schema)
-    kept = base.filter(
-        pc.invert(pc.is_in(base["data_point_id"], value_set=latest["data_point_id"]))
-    )
-    return pa.concat_tables([kept, winners])
+        "cluster_id": pc.coalesce(kept, nearest),
+    }).cast(schema)
 
 
 def _index_schema(updates: T.StructType) -> T.StructType:
@@ -156,24 +160,21 @@ def _spark_merge(
     base: DataFrame | None, updates: DataFrame, centroids: np.ndarray,
     dim: int,
 ) -> DataFrame:
-    """The Spark executor of ``merge_keys``: update rows numbered in
-    arrival order, unioned with the base rows, repartitioned and sorted
-    by key; each task feeds the kernel runs of whole keys, batch by
-    batch, carrying the last key of a batch into the next."""
+    """The Spark executor of ``merge_keys``. Python sees the update rows
+    only: numbered in scan order, joined by key to the stored
+    ``cluster_id``s, repartitioned and sorted by key, so each task feeds
+    the kernel runs of whole keys batch by batch, carrying the last key
+    of a batch into the next. The base rows of keys the epoch does not
+    rewrite stay in the JVM (an anti join on the update keys) and are
+    unioned with the kernel's winners."""
+    key = "data_point_id"
     schema = _index_schema(updates.schema)
     arrow = to_arrow_schema(schema)
     cols = updates.columns
-    has_base = base is not None
 
     def _kernel(rows: pa.Table) -> pa.Table:
-        is_update = pc.is_valid(rows["_seq"])
-        upd = rows.filter(is_update)
-        upd = upd.take(pc.sort_indices(upd["_seq"])).select(cols)
-        old = (
-            rows.filter(pc.invert(is_update)).select(arrow.names).cast(arrow)
-            if has_base else arrow.empty_table()
-        )
-        return merge_keys(old, upd, centroids, dim)
+        stored = pa.table({key: rows[key], "cluster_id": rows["_stored"]})
+        return merge_keys(rows.select(cols), stored, centroids, dim, arrow)
 
     def _partition(batches):
         carry = None
@@ -183,7 +184,7 @@ def _spark_merge(
                 rows = pa.concat_tables([carry, rows])
             if not rows.num_rows:
                 continue
-            cut = pc.index(rows["data_point_id"], rows["data_point_id"][-1]).as_py()
+            cut = pc.index(rows[key], rows[key][-1]).as_py()
             if cut:
                 yield from _kernel(rows.slice(0, cut)).to_batches()
             carry = rows.slice(cut)
@@ -191,14 +192,32 @@ def _spark_merge(
             yield from _kernel(carry).to_batches()
 
     rows = updates.withColumn("_seq", F.monotonically_increasing_id())
-    if base is not None:
-        rows = base.unionByName(rows, allowMissingColumns=True)
-    par = updates.sparkSession.sparkContext.defaultParallelism
-    return (
-        rows.repartition(par, "data_point_id")
-        .sortWithinPartitions("data_point_id")
+    rows = (
+        rows.join(
+            base.select(key, F.col("cluster_id").alias("_stored")), key, "left"
+        )
+        if base is not None
+        else rows.withColumn("_stored", F.lit(None).cast(T.IntegerType()))
+    )
+    spark = updates.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    winners = (
+        rows.repartition(par, key)
+        .sortWithinPartitions(key, "_seq")
         .mapInArrow(_partition, schema)
     )
+    if base is None:
+        return winners
+    merged = base.join(updates.select(key), key, "left_anti").unionByName(
+        winners
+    ).select(*schema.names)
+    # a file read makes every field nullable; restore the index schema
+    # (its non-null maps), row by row in the JVM, so these files carry
+    # the schema of the first epoch's and the driver's
+    jspark = spark._jsparkSession
+    return DataFrame(jspark.createDataFrame(
+        merged._jdf.javaRDD(), jspark.parseDataType(schema.json())
+    ), spark)
 
 
 def _driver_merge(
@@ -228,7 +247,16 @@ def _driver_merge(
         ),
         partition_base_dir=root,
     ).to_table() if inputs else arrow.empty_table()
-    merged = merge_keys(base, rows, centroids, dim)
+    winners = merge_keys(
+        rows, base.select(["data_point_id", "cluster_id"]), centroids, dim,
+        arrow,
+    )
+    merged = pa.concat_tables([
+        base.filter(pc.invert(pc.is_in(
+            base["data_point_id"], value_set=winners["data_point_id"]
+        ))),
+        winners,
+    ])
     merged = merged.take(pc.sort_indices(
         merged, sort_keys=[(c, "ascending") for c in parts]
     ))
@@ -288,10 +316,10 @@ def stream_merge_into_ivf_index(
 
     Same exactly-once contract as stream_merge_into_index (checkpoint +
     keyed idempotent merge); each batch merges through ``merge_keys``:
-    the last row of a key in the batch wins, new keys take a
-    ``cluster_id`` from ``centroids`` and existing keys keep theirs
-    (sticky — see module docstring). Documents over the ingest token
-    gate are dropped.
+    the last row of a key in the micro-batch's scan order wins, new
+    keys take a ``cluster_id`` from ``centroids`` and existing keys keep
+    theirs (sticky — see module docstring). Documents over the ingest
+    token gate are dropped.
 
     ``txlog=True`` (r15): each epoch's bucket surgery commits through
     the transactional log -- the touched buckets' live files are
@@ -301,10 +329,10 @@ def stream_merge_into_ivf_index(
     raises, Structured Streaming retries the epoch, and the
     (checkpoint_dir, epoch_id) txn meta makes the retry exactly-once.
     Readers of a tx index must use ``sources.txlog.read_table_any``.
-    A tx epoch of a local index under ``DRIVER_EPOCH_BUDGET_BYTES``
-    (micro-batch file bytes plus the touched buckets' live bytes) runs
-    on the driver in one collect and launches one job; any other
-    epoch, and every ``txlog=False`` epoch, runs the kernel on Spark.
+    A tx epoch of a local index whose micro-batch file bytes plus the
+    index's live bytes are under ``DRIVER_EPOCH_BUDGET_BYTES`` runs on
+    the driver in one collect and launches one job; any other epoch,
+    and every ``txlog=False`` epoch, runs the kernel on Spark.
 
     Without ``trigger_seconds`` the query triggers as fast as it can,
     so an idle source is re-listed with no pause between polls. Drain
@@ -395,21 +423,26 @@ def _tx_merge_batch(
         _delete_files,
         _scheme_of,
         _stage_and_move_in,
+        _strip_file_scheme,
         read_files,
     )
 
     spark = batch_df.sparkSession
     log = TxLog(spark, index_path)
+    live_bytes = 0
     if log.exists():
         done = log.find_txn(meta["txn_app"], meta["txn_batch"])
         if done is not None:
             return done
-    batch_bytes = _plan_bytes(batch_df)
+        live_bytes = log.table_stats()[1]
+    elif os.path.isdir(_strip_file_scheme(index_path)):
+        # a plain layout the log would adopt: its size is not known here
+        live_bytes = DRIVER_EPOCH_BUDGET_BYTES
     rows = (
         updates.toArrow()
-        if batch_bytes < DRIVER_EPOCH_BUDGET_BYTES
-        and _scheme_of(index_path) in (None, "file")
+        if _scheme_of(index_path) in (None, "file")
         and log.schema_at() is None
+        and _plan_bytes(batch_df) + live_bytes < DRIVER_EPOCH_BUDGET_BYTES
         else None
     )
     buckets = (
@@ -424,9 +457,7 @@ def _tx_merge_batch(
     inputs = [f for f in live if f["path"].split("/", 1)[0] in touched]
     schema = _index_schema(updates.schema)
     parts = ("_bucket", "cluster_id")
-    if rows is not None and batch_bytes + sum(
-        int(f["size"]) for f in inputs
-    ) < DRIVER_EPOCH_BUDGET_BYTES:
+    if rows is not None:
         new = _driver_merge(log, rows, inputs, schema, centroids, dim)
     else:
         # the base files were written from epochs of this same shape, so

@@ -7,8 +7,9 @@ sequences feed two indexes from one source, one at the default
 epoch both hold the rows of a model built from ``hash_embedding_numpy``
 and the sticky-leaf rule, and an epoch with no accepted row (empty,
 all over the token gate, or a replay) commits no version. A second
-test mixes driver-written and Spark-written files in one index and
-reads it through ``read_table_any`` and a ``ServingReplica``."""
+test drains two rewrites of one key in one micro-batch, a third mixes
+driver-written and Spark-written files in one index and reads it
+through ``read_table_any`` and a ``ServingReplica``."""
 
 import os
 import re
@@ -198,6 +199,31 @@ def test_driver_and_spark_executors_write_equal_rows(spark, tmp_path, epochs):
             schemas.add(pq.read_schema(path).remove_metadata())
     assert len(schemas) <= 1, schemas
     shutil.rmtree(work, ignore_errors=True)
+
+
+def test_two_rewrites_in_one_micro_batch_follow_the_scan_order(
+    spark, tmp_path
+):
+    """Two rewrites of one key land as two files and drain in one
+    micro-batch: on both executors the last row in the micro-batch's
+    scan order wins. Spark's file scan reads the larger file first, so
+    here the text of the older, smaller file wins."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _land(src, "a.parquet", [(1, "alpha doc 1 old")])
+    _land(src, "b.parquet", [(1, "beta gamma doc 1 new")] + [
+        (100 + i, f"delta 42 doc {i}") for i in range(40)
+    ])
+    scan = spark.read.schema(SCHEMA).parquet(src).collect()
+    model = _Model()
+    model.epoch([(r.doc_id, r.text) for r in scan])
+    assert model.latest[1] == "alpha doc 1 old"
+    for name, budget in (("driver", None), ("spark", 0)):
+        index = str(tmp_path / name)
+        _drain(spark, src, index, str(tmp_path / f"ck_{name}"), budget)
+        # v0 creates the log, v1 is the one micro-batch's merge
+        assert TxLog(spark, index).current_version() == 1, name
+        assert _stored(read_table(spark, index)) == model.rows(), name
 
 
 def test_mixed_writer_index_reads_like_the_model(spark, tmp_path):
