@@ -70,7 +70,14 @@ from .ingest import DEFAULT_MERGE_BUCKETS, _bucket_expr, _is_path_not_found
 
 # A tx epoch runs on the driver when its micro-batch's file bytes (the
 # optimizer's estimate) plus the index's live bytes (from the manifest)
-# are under this; both are known without a job.
+# are under this; both are known without a job. Speed sets no bound
+# here: on 4 cores the driver executor took a quarter to a fifth of the
+# Spark executor's wall at every measured size, 4 to 107 MB of live
+# files (scripts/epoch_crossover.py). Driver memory does: the touched
+# rows take about 1.5x their file bytes in Arrow, and the filter and the
+# sort before the write copy them twice more, so an epoch at this budget
+# holds under about 300 MiB, inside a replica's RESIDENT_BUDGET_BYTES in
+# the same driver.
 DRIVER_EPOCH_BUDGET_BYTES = 64 * 1024 * 1024
 
 
